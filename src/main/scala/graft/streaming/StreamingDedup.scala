@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.tables.ManagedTable
@@ -21,32 +22,43 @@ import graft.text.MinHashDedup
   *    batch touches a bounded slice of the index instead of re-scanning
   *    all of it — the fix for the per-batch full-index scan.
   *  - `sigs` — one row per doc: `(id, shingle hashes)`, partitioned by
-  *    `__sp = pmod(xxhash64(id), parts)`. The replay anti-join and the
-  *    exact-Jaccard verification read only the partitions of the ids they
-  *    actually probe, pruned the same way.
+  *    `__sp = pmod(xxhash64(id), parts)`. The already-indexed probe and
+  *    the exact-Jaccard verification read only the partitions of the ids
+  *    they actually probe, pruned the same way.
   *
-  * Per batch:
+  * Per batch, one filter-and-verify plan:
   *
-  *  1. batch-internal near-dedup (keep-first, the batch pipeline's rule);
-  *  2. LSH candidate join of the batch's band hashes against the pruned
-  *     bucket partitions — only bucket collisions are compared;
-  *  3. exact-Jaccard verification of candidates over the stored shingle
-  *     hash sets (same predicate as the batch path, so a batch replay
-  *     equals the batch dedup);
-  *  4. novel docs append to `out`, their bucket rows to `buckets`, their
-  *     signatures to `sigs` — in THAT order, with `sigs` as the commit
-  *     point: the replay filter (step 1's anti-join) keys off `sigs`
-  *     membership, and the `out`/`buckets` appends each carry their own
-  *     id-level anti-join, so a batch that crashes between ANY two of the
-  *     three commits replays without duplicating rows anywhere (each
-  *     ManagedTable commit is individually atomic);
-  *  5. the index auto-compacts once it fragments past `maxIndexFiles`.
+  *  1. stage once: `(id, shingle hashes, id residue, band hashes)` for the
+  *     batch, persisted and materialized by the residue collect;
+  *  2. one candidate join on `(band, bandHash)`: the batch's band rows
+  *     against the batch's band rows ∪ the pruned bucket rows. An index
+  *     doc is a candidate in any shared bucket (uncapped); a batch doc
+  *     only if its id is smaller (keep-first, the batch pipeline's rule)
+  *     and the bucket holds ≤ `maxBucketSize` batch docs;
+  *  3. one verification join: exact Jaccard over the batch hashes ∪ the
+  *     pruned `sigs` rows (same predicate as the batch path, so a batch
+  *     replay equals the batch dedup). The same `sigs` read yields the
+  *     batch ids the index already holds;
+  *  4. one anti-join: novel = staged − (verified losers ∪ indexed ids);
+  *  5. novel docs append to `out`, their bucket rows to `buckets`, their
+  *     signatures to `sigs` — with `sigs` committing last: every append
+  *     records the batch's `txn` version and no-ops on replay, and a
+  *     recorded `sigs` version proves the whole batch landed, so a batch
+  *     that crashes between ANY two of the three commits replays without
+  *     duplicating rows anywhere (each ManagedTable commit is individually
+  *     atomic). The index then auto-compacts once it fragments past
+  *     `maxIndexFiles`.
   *
-  * Driver involvement per batch is three bounded collects (the distinct
-  * partition residues to probe — at most `parts` longs each); everything
-  * row-scale stays distributed. `parts` trades read amplification against
-  * directory count: at a 10⁹-doc index, parts=4096 makes a small batch
-  * read tens of partitions instead of terabytes.
+  * Driver involvement per batch is at most two bounded collects (the
+  * distinct partition residues to probe — at most `parts` longs per
+  * table; the second, the bucket rows' id residues, is skipped once the
+  * batch's own ids cover every `sigs` partition) plus the novel count;
+  * everything row-scale stays distributed. An empty index (the first
+  * batch, and every replay of it) skips both collects and both index
+  * reads: steps 2–4 then run over the batch alone. `parts` trades read
+  * amplification against directory count: at a 10⁹-doc index,
+  * parts=4096 makes a small batch read tens of partitions instead of
+  * terabytes.
   */
 object StreamingDedup {
 
@@ -134,6 +146,22 @@ object StreamingDedup {
   private def spOf(idCol: String, parts: Int) =
     pmod(xxhash64(col(idCol)), lit(parts.toLong))
 
+  /** The distinct values of each `array<bigint>` column of `df` (one job,
+    * no shuffle): every partition reduces its rows to one value set per
+    * column before the collect, so at most partitions × distinct values
+    * per column ever reach the driver — for partition residues, at most
+    * `parts` longs per partition.
+    */
+  private def distinctLongs(df: DataFrame): Seq[Seq[Long]] = {
+    val n = df.schema.size
+    val perPartition = df.rdd.mapPartitions { rows =>
+      val sets = Array.fill(n)(scala.collection.mutable.HashSet.empty[Long])
+      rows.foreach(r => (0 until n).foreach(i => sets(i) ++= r.getSeq[Long](i)))
+      Iterator(sets.map(_.toArray))
+    }.collect()
+    (0 until n).map(i => perPartition.flatMap(_(i)).distinct.toSeq)
+  }
+
   /** Pure per-batch core (callable from batch jobs too): near-dedup
     * `batch` against `index`, append novel docs to `out` and their
     * signatures/buckets to `index`. Returns the number of novel documents.
@@ -169,9 +197,9 @@ object StreamingDedup {
       index.sigs.txnVersion(txn._1).exists(_ >= txn._2))
     if (fullyApplied) return 0L
     // WIDTH-SCOPED CHILD SESSION for the per-batch pipeline (the
-    // PageRank/mkn small-regime idiom): the dedup plan is ~10 small
-    // joins/aggregations per batch, and at session width every one of
-    // them shuffles a toy-sized frame across the full partition count
+    // PageRank/mkn small-regime idiom): the dedup plan is a handful of
+    // small joins and exchanges per batch, and at session width every
+    // one of them shuffles a toy-sized frame across the full partition count
     // — measured (tools/StreamProfile, sf0.1 probe): the same two
     // batches cost 11.6 s at width 32 and 6.5 s at width 4, all of it
     // task-scheduling and tiny-exchange overhead. The width derives
@@ -204,120 +232,104 @@ object StreamingDedup {
     }
     try {
     val batchB = bridge(batch)
-    // 1. tokenize + hash ONCE for the whole batch: this single persisted
-    // frame feeds the within-batch dedup, the index candidate join, the
-    // verification, and the index append (tokenization dominates the
-    // pipeline; an earlier formulation ran it twice per batch)
+    val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // 1. stage ONCE: tokenize + hash + sign the batch into one persisted
+    // frame feeding the candidate join, both verification sides, the
+    // already-indexed probe and all three appends (tokenization dominates
+    // the pipeline's compute)
     val hashed = batchB.select(col(idCol),
         graft.plans.expressions.shingle_hashes(col(textCol), shingleWidth).as(HH))
       .withColumn("__sig",
         MinHashDedup.minHashFromHashes(col(HH), numHashes))
-      .select(col(idCol), col(HH),
+      .select(col(idCol), col(HH), spOf(idCol, parts).as("__sp"),
         MinHashDedup.bandHashes(col("__sig"), numHashes, bands).as(BANDS))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // batch-internal keep-first near-dedup (the batch operator's rule:
-    // drop the larger id of every verified pair), over the staged frame
-    val withinCands = MinHashDedup.candidatePairsFromHashes(
-      hashed.select(col(idCol).as("__id"), col(HH).as("__hh")),
-      numHashes, bands, maxBucketSize)
-    val losers = withinCands
-      .join(hashed.select(col(idCol).as("id_a"), col(HH).as("__ha")), Seq("id_a"))
-      .join(hashed.select(col(idCol).as("id_b"), col(HH).as("__hb")), Seq("id_b"))
-      .filter(graft.plans.expressions.hash_jaccard(col("__ha"), col("__hb"))
-        >= threshold)
-      .select(col("id_b").as(idCol)).distinct()
-
-    // the batch's exploded band hashes (ALL docs — losers too; see the
-    // residue note below)
-    val allBands = hashed.select(
+      .persist(mad)
+    val batchBands = hashed.select(
         col(idCol), posexplode(col(BANDS)).as(Seq("__band", "__bh")))
       .withColumn("__bp", pmod(col("__bh"), lit(parts.toLong)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // EMPTY-INDEX FAST PATH: until the first novel commit lands (always
     // batch 1, and every replay of it), the index has zero live files —
-    // the residue collect, the known-id anti-join, the LSH candidate
-    // join, and the verification-pruning collect are all provable
-    // no-ops, yet two of them are full job barriers (~1 s each of fixed
-    // scheduling/collect latency at streaming batch sizes). The probe is
-    // log-metadata only (live file count of the latest snapshot), so it
-    // costs nothing at any scale.
+    // both residue collects and both index reads are provable no-ops, and
+    // each collect is a full job barrier. The probe is log-metadata only
+    // (live file count of the latest snapshot), so it costs nothing at
+    // any scale.
     val indexEmpty = timed("empty-probe")(
       index.buckets.detail.numFiles == 0L &&
       index.sigs.detail.numFiles == 0L)
 
-    // BOTH partition-residue sets in ONE driver round-trip (at most
-    // 2·`parts` longs): the id residues pruning the sigs replay read and
-    // the band residues pruning the bucket read. Collected over the whole
-    // batch rather than post-dedup `fresh` — a superset, so the pruned
-    // reads only ever widen (never miss a partition a later join needs),
-    // and one Spark job replaces the two sequential collects that
-    // dominated small-batch latency.
-    val (batchSp, batchBp): (Seq[Long], Seq[Long]) =
-      if (indexEmpty) (Nil, Nil)
-      else {
-        val residues = timed("residues-collect")(
-          hashed.select(spOf(idCol, parts).as("r"), lit(0).as("kind"))
-            .union(allBands.select(col("__bp").as("r"), lit(1).as("kind")))
-            .distinct().collect())
-        (residues.filter(_.getInt(1) == 0).map(_.getLong(0)).toSeq,
-         residues.filter(_.getInt(1) == 1).map(_.getLong(0)).toSeq)
-      }
+    // BOTH partition-residue sets in ONE driver round-trip, which also
+    // materializes `hashed`: the id residues (every batch id is probed
+    // against sigs) and the band residues pruning the bucket read.
+    val Seq(batchSp, batchBp) =
+      if (indexEmpty) Seq(Nil, Nil)
+      else timed("residues-collect")(distinctLongs(hashed.select(
+        array(col("__sp")), transform(col(BANDS), pmod(_, lit(parts.toLong))))))
 
-    // retry-idempotence: ids already indexed (an id re-arriving in a later
-    // batch; replayed batches are handled by `txn`) drop. The sigs read is
-    // pruned to the batch's own id-residue partitions.
-    val deduped = hashed.join(losers, Seq(idCol), "left_anti")
-    val fresh = (if (indexEmpty) deduped
-      else deduped.join(
-        bridge(prunedRead(index.sigs, "__sp", batchSp)).select(col(idCol)),
-        Seq(idCol), "left_anti"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // 3. LSH candidates vs the index — survivors' band hashes against
-    // ONLY the bucket partitions sharing the batch's residues
-    val freshBands = allBands.join(fresh.select(idCol), Seq(idCol), "left_semi")
-    val idxBuckets =
-      if (indexEmpty) None
-      else Some(bridge(prunedRead(index.buckets, "__bp", batchBp))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-    // verification reads only the sigs partitions that can hold a
-    // candidate: the residues come from the PRUNED BUCKET rows (already
-    // persisted, a cheap distinct over a small frame) rather than from
-    // the materialized candidate join — a superset of the candidates'
-    // own residues (every candidate id is a bucket-row id), so the
-    // pruned read only ever widens. This removes what used to be the
-    // slowest per-batch barrier: persisting the LSH equality join just
-    // to collect its residues cost a full extra job; now the candidate
-    // join computes exactly once, INSIDE the verification job.
-    val verified = idxBuckets.map { idx =>
-      val candSp = timed("candSp-collect")(idx.select(
-          pmod(xxhash64(col(idCol)), lit(parts.toLong)).as("__sp"))
-        .distinct().collect().map(_.getLong(0)).toSeq)
-      val idxSigs = bridge(prunedRead(index.sigs, "__sp", candSp))
-      val cs = freshBands
-        .select(col(idCol).as("__new_id"), col("__band"), col("__bh"))
-        .join(idx.select(col(idCol).as("__idx_id"), col("__band"), col("__bh")),
-          Seq("__band", "__bh"))
-        .select("__new_id", "__idx_id").distinct()
-      cs.join(fresh.select(col(idCol).as("__new_id"), col(HH).as("__hh_new")),
-          Seq("__new_id"))
-        .join(idxSigs.select(col(idCol).as("__idx_id"), col(HH).as("__hh_idx")),
-          Seq("__idx_id"))
-        .withColumn("__j",
-          graft.plans.expressions.hash_jaccard(col("__hh_new"), col("__hh_idx")))
-        .filter(col("__j") >= threshold)
-        .select(col("__new_id").as(idCol)).distinct()
+    // the pruned index slices: bucket rows sharing the batch's band
+    // residues, and sigs rows of every id that can matter — the batch's
+    // own ids (already-indexed probe) and every pruned bucket row's id (a
+    // superset of the index candidates). When the batch's ids already
+    // cover every partition the bucket ids cannot widen the read, so the
+    // second collect is skipped.
+    val (idxBuckets, idxSigs) = if (indexEmpty) (None, None) else {
+      val buckets = bridge(prunedRead(index.buckets, "__bp", batchBp))
+      val sigsSp =
+        if (batchSp.size >= parts) batchSp
+        else (batchSp ++ timed("candidate-residues-collect")(distinctLongs(
+          buckets.select(array(spOf(idCol, parts)))).head)).distinct
+      (Some(buckets), Some(bridge(prunedRead(index.sigs, "__sp", sigsSp))))
     }
 
-    // 4. novel docs → out, bucket rows → buckets, signatures → sigs.
-    // sigs LAST: it is the replay filter's source of truth, so a crash
-    // between any two commits re-runs the batch with `fresh` unchanged,
-    // and the out/buckets appends below de-dup themselves by id.
-    // (Empty index: everything fresh is novel — fresh is already
-    // persisted, so reuse it rather than stacking a second persist.)
+    // 2. ONE candidate join on (band, bandHash): every batch band row
+    // against the batch's band rows ∪ the pruned bucket rows. A batch
+    // doc is a candidate loser to an index doc in any shared bucket
+    // (uncapped), and to a smaller-id batch doc in a shared bucket that
+    // holds ≤ `maxBucketSize` batch docs (the within-batch cap, counted
+    // over batch docs only — one pathological key can't go quadratic).
+    val probe = batchBands.select(col(idCol).as("__id"), col("__band"), col("__bh"),
+      count(lit(1)).over(Window.partitionBy("__band", "__bh")).as("__n"))
+    def others(rows: DataFrame, inBatch: Boolean) = rows.select(
+      col(idCol).as("__other"), col("__band"), col("__bh"), lit(inBatch).as("__in_batch"))
+    val batchOthers = others(batchBands, inBatch = true)
+    val pairs = probe
+      .join(idxBuckets.fold(batchOthers)(b => batchOthers.union(others(b, inBatch = false))),
+        Seq("__band", "__bh"))
+      .filter(!col("__in_batch") ||
+        (col("__other") < col("__id") && col("__n") <= maxBucketSize))
+      .select("__id", "__other", "__in_batch")
+
+    // 3. ONE verification join: candidates against the batch hashes ∪
+    // the pruned sigs rows (exact Jaccard over the stored shingle hash
+    // sets — the batch path's predicate, so a batch replay equals the
+    // batch dedup). The same sigs read answers "id already indexed": a
+    // self pair (id, id, index) survives the inner join exactly when the
+    // index holds the id (an id re-arriving in a later batch; replayed
+    // batches are handled by `txn`).
+    def sides(rows: DataFrame, inBatch: Boolean) = rows.select(
+      col(idCol).as("__other"), lit(inBatch).as("__in_batch"), col(HH).as("__hh_o"))
+    val batchSides = sides(hashed, inBatch = true)
+    val cands = idxSigs.fold(pairs)(_ => pairs.union(hashed.select(
+      col(idCol).as("__id"), col(idCol).as("__other"), lit(false).as("__in_batch"))))
+    val removed = cands
+      .join(idxSigs.fold(batchSides)(s => batchSides.union(sides(s, inBatch = false))),
+        Seq("__other", "__in_batch"))
+      .join(hashed.select(col(idCol).as("__id"), col(HH).as("__hh")), Seq("__id"))
+      .filter(col("__id") === col("__other") || // batch pairs have other < id
+        graft.plans.expressions.hash_jaccard(col("__hh"), col("__hh_o")) >= threshold)
+      .select(col("__id").as(idCol))
+
+    // 4. ONE anti-join: a within-batch loser that also matches the index
+    // lands in `removed` either way, so the novel set is exactly the
+    // keep-first-within, index-wins-across result.
+    val novel = hashed.join(removed, Seq(idCol), "left_anti").persist(mad)
+
+    // 5. novel docs → out, bucket rows → buckets, signatures → sigs.
+    // sigs LAST: it is the verification's and the already-indexed probe's
+    // source of truth, so a crash between any two commits re-runs the
+    // batch with the same novel set (bucket rows the crashed run left
+    // behind have no sigs row, so they verify nothing), and the
+    // out/buckets appends below no-op on their txn markers.
     //
     // Why NOT one multi-table commit: each ManagedTable owns its own
     // log — there is no cross-table transaction coordinator (same
@@ -329,17 +341,13 @@ object StreamingDedup {
     // idempotent txn markers + sigs-last ordering. Fusing the logs
     // would save ~40 ms of metadata writes at the price of a
     // coordinating-log protocol.
-    val novelSigs = verified.map(v =>
-      fresh.join(v, Seq(idCol), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      .getOrElse(fresh)
-    val novelCount = timed("novelSigs-count")(novelSigs.count())
+    val novelCount = timed("novel-count")(novel.count())
     if (novelCount > 0) {
       // size the append's file count by rows — a small batch written at
       // the session's full shuffle parallelism produces dozens of tiny
       // files per commit, and every later batch re-opens all of them
       val parts1 = math.max(1L, novelCount / 100000L).toInt
-      val novelIds = novelSigs.select(col(idCol))
+      val novelIds = novel.select(col(idCol))
       // replay protection is the idempotent txn commit alone (O(1) — no
       // guard read of any table)
       val outRows = batchB.join(novelIds, Seq(idCol), "left_semi")
@@ -362,7 +370,7 @@ object StreamingDedup {
       // dozens of per-dir file opens run in parallel instead of inside
       // one task (measured 3× on the per-batch commit tail).
       val partsB = parts
-      val bucketRows = freshBands.join(novelIds, Seq(idCol), "left_semi")
+      val bucketRows = batchBands.join(novelIds, Seq(idCol), "left_semi")
       val bucketsF = Future(timed("buckets-append")(index.buckets.append(
         bucketRows
           .select(col(idCol), col("__band"), col("__bh"), col("__bp"))
@@ -375,8 +383,8 @@ object StreamingDedup {
       // write orphaned by a crash (or by a concurrent schema change,
       // which appendStaged re-writes against) is vacuum-reclaimable,
       // the same exposure append itself has between write and commit.
-      val sigRows = novelSigs
-        .select(col(idCol), col(HH), spOf(idCol, parts).as("__sp"))
+      val sigRows = novel
+        .select(col(idCol), col(HH), col("__sp"))
         .repartition(parts, col("__sp"))
       // the staging write can throw (it is a real Spark job) — capture
       // it, NEVER rethrow before the barrier below, or the in-flight
@@ -393,7 +401,7 @@ object StreamingDedup {
       outR.get; bucketsR.get
       timed("sigs-commit")(index.sigs.appendStaged(sigRows, sigsStagedT.get,
         txn = Some(txn)))
-      // 5. bound index fragmentation (one commit dir per batch otherwise).
+      // 6. bound index fragmentation (one commit dir per batch otherwise).
       // The floor scales with the partition count: a `parts`-way
       // partitioned table can never compact below one file per partition,
       // so a threshold under ~2·parts would trigger a useless full
@@ -404,10 +412,7 @@ object StreamingDedup {
     }
     timed("unpersist") {
       hashed.unpersist()
-      fresh.unpersist()
-      allBands.unpersist()
-      idxBuckets.foreach(_.unpersist())
-      if (!(novelSigs eq fresh)) novelSigs.unpersist()
+      novel.unpersist()
     }
     novelCount
     } finally {

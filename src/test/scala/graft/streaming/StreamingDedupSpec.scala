@@ -192,6 +192,150 @@ class StreamingDedupSpec extends SparkSpec {
     assert(index.toDF.count() == 3)
   }
 
+  /** Seeded alphabetic prose: the tokenizer treats digits as delimiters,
+    * so all variation must live in letters.
+    */
+  private def words(rnd: scala.util.Random, n: Int): Vector[String] =
+    Vector.fill(n)(Vector.fill(3 + rnd.nextInt(6))(('a' + rnd.nextInt(26)).toChar).mkString)
+
+  /** `ws` with the words at `at` replaced by fresh ones. */
+  private def edit(ws: Vector[String], at: Seq[Int], rnd: scala.util.Random): Vector[String] =
+    at.foldLeft(ws)((w, i) => w.updated(i, "zq" + words(rnd, 1).head))
+
+  test("per-batch novel ids equal keep-first-within, index-wins-across " +
+       "over nearDupPairs of batch + earlier novel docs") {
+    val rnd = new scala.util.Random(20261017L)
+    val uniq = Vector.fill(24)(words(rnd, 60))
+    def near(ws: Vector[String]) = edit(ws, Seq(10 + rnd.nextInt(15), 35 + rnd.nextInt(15)), rnd)
+    // chain: a~b and b~c verify at 0.8, a~c does not (4 + 4 edited words)
+    val chainA = words(rnd, 200)
+    val chainB = edit(chainA, Seq(20, 60, 100, 140), rnd)
+    val chainC = edit(chainB, Seq(40, 80, 120, 160), rnd)
+    def doc(id: Long, ws: Vector[String]) = (id, ws.mkString(" "))
+    val batches: Seq[Seq[(Long, String)]] = Seq(
+      Seq(doc(1, uniq(0)), doc(2, uniq(1)), doc(3, uniq(2)), doc(4, uniq(3)),
+        doc(5, uniq(0)), doc(6, near(uniq(1))), doc(7, uniq(4)), doc(8, near(uniq(4))),
+        doc(9, uniq(5)), doc(10, chainA), doc(11, chainB), doc(12, chainC),
+        doc(13, uniq(6)), doc(14, uniq(2))),
+      Seq(doc(20, uniq(7)), doc(21, uniq(0)), doc(22, near(uniq(3))), doc(23, uniq(8)),
+        doc(24, near(uniq(8))), doc(25, uniq(9)), doc(26, uniq(9)),
+        doc(2, uniq(10)), // an indexed id re-arrives with new text
+        doc(5, uniq(11)), // a batch-1 loser's id: never indexed, so novel
+        doc(27, chainC), doc(28, uniq(12))),
+      Seq(doc(30, near(uniq(7))), doc(31, uniq(13)), doc(32, uniq(13)), doc(33, uniq(14)),
+        doc(34, near(uniq(11))), doc(35, uniq(15)), doc(9, uniq(16)), doc(36, chainB),
+        doc(37, uniq(17)), doc(38, near(uniq(17)))))
+
+    val index = StreamingDedup.openIndex(spark, tmpDir("sdeq"), "doc_id",
+      org.apache.spark.sql.types.LongType, parts = 8)
+    val out = ManagedTable.create(
+      Seq.empty[Doc].toDF("doc_id", "text"), tmpDir("sdeqout"))
+    var indexed = Seq.empty[(Long, String)]
+    batches.zipWithIndex.foreach { case (b, i) =>
+      // reference: pairs over (batch ∪ indexed) keyed so that batch and
+      // index copies of one id stay distinct (k = 2·id + isBatch)
+      val u = (b.map { case (id, t) => (2 * id + 1, t) } ++
+        indexed.map { case (id, t) => (2 * id, t) }).toDF("k", "text")
+      val pairs = graft.text.MinHashDedup.nearDupPairs(u, "k", "text",
+          threshold = 0.8, numHashes = 64, bands = 16)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+      val indexedIds = indexed.map(_._1).toSet
+      val removed = pairs.flatMap { case (ka, kb) =>
+        (ka % 2, kb % 2) match {
+          case (1L, 1L) => Seq(kb / 2)          // keep-first within the batch
+          case (1L, 0L) => Seq(ka / 2)          // the index wins
+          case (0L, 1L) => Seq(kb / 2)
+          case _ => Nil
+        }
+      }.toSet ++ b.map(_._1).filter(indexedIds)
+      val want = b.map(_._1).toSet -- removed
+      if (i == 0) {
+        assert(pairs.contains((21L, 23L)) && pairs.contains((23L, 25L)) &&
+          !pairs.contains((21L, 25L)), s"setup: chain 10~11~12 not as planted: $pairs")
+        assert(want == Set(1L, 2L, 3L, 4L, 7L, 9L, 10L, 13L), s"setup: $want")
+      }
+      val n = StreamingDedup.incremental(b.toDF("doc_id", "text"), "doc_id", "text",
+        index, out, txn = ("equiv", i.toLong))
+      val got = out.toDF.select("doc_id").as[Long].collect().toSet -- indexedIds
+      assert(got == want, s"batch $i novel ids")
+      assert(n == want.size)
+      indexed ++= b.filter { case (id, _) => want(id) }
+    }
+    assert(out.toDF.count() == indexed.size, "each novel doc lands exactly once")
+  }
+
+  test("maxBucketSize caps within-batch buckets only; index candidates are uncapped") {
+    val index = StreamingDedup.openIndex(spark, tmpDir("sdcap"), "doc_id",
+      org.apache.spark.sql.types.LongType, parts = 8)
+    val out = ManagedTable.create(
+      Seq.empty[Doc].toDF("doc_id", "text"), tmpDir("sdcapout"))
+    // an exact pair shares every bucket, and each holds 2 > 1 batch docs
+    val n1 = StreamingDedup.incremental(
+      Seq((1L, base), (2L, base), (3L, other)).toDF("doc_id", "text"),
+      "doc_id", "text", index, out, txn = ("cap", 0L), maxBucketSize = 1)
+    assert(n1 == 3, "the capped in-batch pair is never compared, so both survive")
+    // next batch: two more copies, so each bucket again holds 2 > 1 batch
+    // docs — yet both drop against the index
+    val n2 = StreamingDedup.incremental(
+      Seq((4L, base), (5L, third), (6L, base)).toDF("doc_id", "text"),
+      "doc_id", "text", index, out, txn = ("cap", 1L), maxBucketSize = 1)
+    assert(n2 == 1, "the same text next batch drops against the index")
+    assert(out.toDF.select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 3L, 5L))
+  }
+
+  /** Spark jobs started while `body` runs: a listener counts every job
+    * start and the loop waits until the count settles (the listener bus
+    * delivers asynchronously). Not filtered by job group: the commit tail
+    * runs two appends on pool threads that do not inherit the caller's
+    * local properties, and suites in the forked test JVM run one at a time.
+    */
+  private def countJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var last = -1
+      var settled = 0
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (settled < 3 && System.nanoTime() < deadline) {
+        val cur = counter.get()
+        if (cur == last) settled += 1 else { settled = 0; last = cur }
+        Thread.sleep(50)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    counter.get()
+  }
+
+  test("a non-first batch runs a bounded number of Spark jobs") {
+    val index = StreamingDedup.openIndex(spark, tmpDir("sdjobs"), "doc_id",
+      org.apache.spark.sql.types.LongType, parts = 4)
+    val out = ManagedTable.create(
+      Seq.empty[Doc].toDF("doc_id", "text"), tmpDir("sdjobsout"))
+    StreamingDedup.incremental(
+      Seq((1L, base), (2L, other), (3L, base + "!")).toDF("doc_id", "text"),
+      "doc_id", "text", index, out, txn = ("jobs", 0L), threshold = 0.5)
+    val b2 = Seq((10L, nearDup), (11L, third), (12L, third)).toDF("doc_id", "text")
+    b2.count() // materialize the local relation outside the counted region
+    var n = -1L
+    val jobs = countJobs {
+      n = StreamingDedup.incremental(b2, "doc_id", "text", index, out,
+        txn = ("jobs", 1L), threshold = 0.5)
+    }
+    assert(n == 1)
+    assert(jobs <= MaxJobsPerBatch, s"$jobs Spark jobs for one batch")
+  }
+
+  /** 1.25 × the 19 jobs the filter-and-verify plan runs for the batch
+    * above (the plan it replaced ran 38).
+    */
+  private val MaxJobsPerBatch = 23
+
   test("autoOptimize compacts only past the file threshold") {
     val t = ManagedTable.create(Seq((1L, "a")).toDF("id", "v"), tmpDir("ao"))
     (1 to 5).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("id", "v")))
