@@ -18,9 +18,14 @@ import graft.tables.{ManagedTable, Merge}
   *    version" via the NULL-mergeKey staging union (:107-114);
   *  - works over any orderable effective-time type (timestamp, date, int).
   *
-  * Scale shape: the staging join `updates ⋈ base ON pk` and the merge join
-  * shuffle on the primary key only; with a small updates frame Catalyst
-  * broadcasts it (AQE), so base is scanned twice and never shuffled fully.
+  * Scale shape: an upsert through [[genericUpsert]] reads one snapshot and
+  * collects the batch's primary keys once (on the driver when the batch is
+  * a local frame). On a stats-bearing table those keys select the files
+  * whose pk bounds overlap the batch, and the merge is staged once over
+  * just those files: both the staging join `updates ⋈ base ON pk` and the
+  * merge's single outer join read only them, from the same log entry the
+  * commit is based on. Without stats, or when every file overlaps, both
+  * read the full snapshot.
   */
 object Scd2 {
 
@@ -39,8 +44,18 @@ object Scd2 {
                       isCurrentColName: String,
                       effectiveTimeColName: String,
                       endTimeColName: String): Merge.Builder = {
+    validate(base.columns.toSeq, updates, primaryKey, attrColNames,
+      isCurrentColName, effectiveTimeColName, endTimeColName)
+    staged(base, updates, primaryKey, attrColNames,
+      isCurrentColName, effectiveTimeColName, endTimeColName)
+  }
+
+  private def validate(baseCols: Seq[String], updates: DataFrame, primaryKey: String,
+                       attrColNames: Seq[String],
+                       isCurrentColName: String,
+                       effectiveTimeColName: String,
+                       endTimeColName: String): Unit = {
     // validate the base table (reference :78-87)
-    val baseCols = base.columns.toSeq
     val requiredBase = (primaryKey +: attrColNames) ++
       Seq(isCurrentColName, effectiveTimeColName, endTimeColName)
     if (baseCols.sorted != requiredBase.sorted)
@@ -54,7 +69,13 @@ object Scd2 {
       throw new GraftTypeError(
         s"The updates DataFrame has these columns ${errors.pyRepr(updCols)}, " +
         s"but these columns are required ${errors.pyRepr(requiredUpd)}")
+  }
 
+  private def staged(base: DataFrame, updates: DataFrame, primaryKey: String,
+                     attrColNames: Seq[String],
+                     isCurrentColName: String,
+                     effectiveTimeColName: String,
+                     endTimeColName: String): Merge.Builder = {
     val updatesAttrs = attrColNames
       .map(a => s"updates.$a <> base.$a").mkString(" OR ")
     val stagedUpdatesAttrs = attrColNames
@@ -90,18 +111,24 @@ object Scd2 {
       .whenNotMatchedInsert(insertValues)
   }
 
-  /** Generic shell (reference :43-141). Routed through `Merge.execute`,
-    * so a stats-bearing unpartitioned table rewrites only the files whose
-    * primary-key bounds overlap the update batch (and a pk-partition-bound
-    * table only its touched partitions) — a 1-row SCD2 upsert stops
-    * rewriting the whole table.
+  /** Generic shell (reference :43-141). Routed through
+    * `Merge.executeStaged`, so a stats-bearing table rewrites only the
+    * files whose primary-key bounds overlap the update batch (and a
+    * pk-partition-bound table only its touched partitions), and the
+    * staging join reads only those files too — a 1-row SCD2 upsert stops
+    * reading and rewriting the whole table.
     */
   def genericUpsert(table: ManagedTable, updates: DataFrame, primaryKey: String,
                     attrColNames: Seq[String], isCurrentColName: String,
-                    effectiveTimeColName: String, endTimeColName: String): Unit =
-    builder(table.toDF, updates, primaryKey, attrColNames,
+                    effectiveTimeColName: String, endTimeColName: String): Unit = {
+    validate(table.schema.fieldNames.toSeq, updates, primaryKey, attrColNames,
       isCurrentColName, effectiveTimeColName, endTimeColName)
-      .execute(table)
+    // the merge binds base.pk = staged_updates.mergeKey, whose non-NULL
+    // values are exactly the updates' primary keys
+    Merge.executeStaged(table, primaryKey, updates.select(col(primaryKey)))(base =>
+      staged(base, updates, primaryKey, attrColNames,
+        isCurrentColName, effectiveTimeColName, endTimeColName))
+  }
 
   /** Conventional-column wrapper (reference :11-40). */
   def upsert(table: ManagedTable, updates: DataFrame, primaryKey: String,

@@ -379,6 +379,9 @@ object Iceberg {
             val inline = root.path("schema")
             if (all.size == 1) all.head
             else if (all.isEmpty && inline.has("fields")) inline
+            else if (all.isEmpty) throw new IllegalArgumentException(
+              "Iceberg metadata has an empty schemas[] and no inline " +
+                "schema node with fields — there is no schema to read")
             else throw new IllegalArgumentException(
               "Iceberg metadata has more than one schemas[] entry but " +
                 "no current-schema-id — the choice is ambiguous (a " +

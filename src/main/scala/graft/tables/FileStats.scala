@@ -395,22 +395,63 @@ object FileStats {
     * column is always kept.
     */
   def overlapping(files: Seq[FileStat], schema: StructType, colName: String,
-                  values: Seq[Any]): Seq[FileStat] = {
+                  values: Seq[Any]): Seq[FileStat] =
+    overlappingFilter(schema, colName, values)(files)
+
+  /** [[overlapping]] as a reusable filter: the values are encoded into the
+    * column's domain and sorted ONCE, and each file's [min, max] is then
+    * answered by one binary search — O((files + keys) · log keys) with
+    * each bound parsed once, instead of re-parsing both bounds for every
+    * (file, key) pair. A file-pruned MERGE reuses the filter for every
+    * conflict re-check of concurrently added files. A value that cannot
+    * be encoded (or a column that is not skippable) disables pruning.
+    */
+  private[tables] def overlappingFilter(schema: StructType, colName: String,
+                                        values: Seq[Any]): Seq[FileStat] => Seq[FileStat] = {
     val field = schema.fields.find(_.name == colName)
       .orElse(schema.fields.find(_.name.equalsIgnoreCase(colName)))
-    val dom = field.flatMap(f => domainOf(f.dataType))
-    if (field.isEmpty || dom.isEmpty) files
-    else {
-      val d = dom.get
-      val encoded = values.flatMap(v => encodeValue(d, field.get.dataType, v))
-      if (encoded.size != values.size) files // un-encodable value: no pruning
-      else files.filter { f =>
-        (for { lo <- f.min.get(field.get.name); hi <- f.max.get(field.get.name) }
-          yield encoded.exists(v => cmp(d, lo, v) <= 0 && cmp(d, hi, v) >= 0))
-          .getOrElse(true)
-      }
-    }
+    val keep: Seq[FileStat] => Seq[FileStat] = identity
+    (for {
+      f <- field
+      d <- domainOf(f.dataType)
+      encoded = values.flatMap(v => encodeValue(d, f.dataType, v))
+      if encoded.size == values.size
+    } yield d match {
+      case LongDom =>
+        boundsFilter(f.name, encoded.map(_.toLong).sorted.toIndexedSeq)(_.toLong)
+      case DoubleDom =>
+        boundsFilter(f.name, encoded.map(_.toDouble)
+          .sorted(Ordering.Double.TotalOrdering).toIndexedSeq)(_.toDouble)(
+          Ordering.Double.TotalOrdering)
+      case StringDom =>
+        boundsFilter(f.name, encoded.map(UTF8String.fromString)
+          .sorted(Utf8Order).toIndexedSeq)(UTF8String.fromString)(Utf8Order)
+    }).getOrElse(keep)
   }
+
+  // parquet's unsigned-byte order, the one [[cmp]] uses for strings
+  private object Utf8Order extends Ordering[UTF8String] {
+    def compare(a: UTF8String, b: UTF8String): Int = a.compareTo(b)
+  }
+
+  /** Keep a file iff some key of the sorted `keys` lies in its [min, max]
+    * on `name` (a file without bounds is kept): the first key >= min is
+    * found by binary search and checked against max.
+    */
+  private def boundsFilter[T](name: String, keys: IndexedSeq[T])(parse: String => T)(
+      implicit ord: Ordering[T]): Seq[FileStat] => Seq[FileStat] =
+    files => files.filter { f =>
+      (for { lo <- f.min.get(name); hi <- f.max.get(name) } yield {
+        val l = parse(lo)
+        var a = 0
+        var b = keys.length
+        while (a < b) {
+          val m = (a + b) >>> 1
+          if (ord.lt(keys(m), l)) a = m + 1 else b = m
+        }
+        a < keys.length && ord.lteq(keys(a), parse(hi))
+      }).getOrElse(true)
+    }
 
   /** Files whose bounds on `colName` may intersect [lo, hi] (inclusive).
     * Used when the source key set is too large to enumerate.

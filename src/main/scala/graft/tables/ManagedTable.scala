@@ -264,7 +264,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     if (ManagedTable.hasFieldIds(schema))
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
 
-  private def snapshotDF(e: LogEntry): DataFrame = {
+  private[tables] def snapshotDF(e: LogEntry): DataFrame = {
     ensureFieldIdRead(e.schema)
     if (e.files.nonEmpty) readFilesDF(e.files, e.schema, e.version)
     else if (e.dirs.isEmpty) {

@@ -1,10 +1,13 @@
 package graft.tables
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And => CatAnd, EqualNullSafe => CatEqualNullSafe, EqualTo => CatEqualTo, Expression => CatExpr}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.storage.StorageLevel
 
 /** Join-classified MERGE: the engine's replacement for Delta Lake's
   * `DeltaTable.merge(...).whenMatchedUpdate/Delete(...).whenNotMatchedInsert(...)
@@ -24,15 +27,28 @@ import org.apache.spark.sql.catalyst.expressions.{And => CatAnd, EqualNullSafe =
   *    non-matching rows, e.g. the SCD2 NULL-mergeKey staging pattern
   *    (mack/__init__.py:107-114).
   *
-  * Execution shape (scale rationale): one equi-ish join target⋈source on the
-  * merge condition classifies every row as matched / target-only /
-  * source-only; the result table is then `unchanged ∪ rewritten ∪ inserted`.
-  * Matched rows are found with an inner join (Catalyst picks broadcast when
-  * the source — usually a small staged-updates frame — fits, else
-  * shuffle-hash/SMJ with AQE), unchanged rows with a left-anti join on the
-  * same keys, so the target is scanned at most twice and shuffled on the
-  * merge key only — the same asymptotics as Delta's MergeIntoCommand
-  * find-touched-files + rewrite, minus file-level pruning.
+  * Execution shape (scale rationale): every output row comes from ONE
+  * full outer join of target and source on the merge condition (a left
+  * outer join when there is no insert clause). Target rows carry a row id
+  * and source rows a source row id, and the two tags classify each joined
+  * row as matched, target-only or source-only; one clause-index column
+  * then records the first applicable clause of its class. One window
+  * counts each target row's matches: more than one raises the
+  * multiple-match error when a whenMatched clause exists, and an
+  * insert-only merge keeps the first, so a matched target row passes
+  * through once. When the condition is a conjunction of equi-bindings the
+  * window counts source rows per key, inside the shuffle the join already
+  * does on the source; otherwise it runs over the joined rows, partitioned
+  * by the target row id (a source-only row by its own id, so those never
+  * pile into one partition). One filter drops deleted and unclaimed rows,
+  * and one projection writes every column through the clause that
+  * applies. The target is scanned once and shuffled once on the merge
+  * key; the CDC sidecar ([[Builder.changesFrame]]) is derived from the
+  * same classified frame. This is Delta's MergeIntoCommand
+  * rewrite: one outer join over the touched files, which
+  * [[Builder.execute]] narrows first by partition values or by the
+  * merge-key bounds of each file (one driver-side collect of the source's
+  * keys).
   */
 object Merge {
 
@@ -52,6 +68,22 @@ object Merge {
       extends FilePrune
   }
 
+  /** The source's keys for one equi-binding of the merge condition, as
+    * collected by [[collectKeys]]: the input of the pure pruning decision
+    * ([[prunePlan]]).
+    */
+  private[tables] sealed trait SourceKeys
+  private[tables] object SourceKeys {
+    /** Every distinct key (at most [[maxPrunedMergeKeys]]). Under `=` the
+      * NULL keys are already dropped; under `<=>` a NULL key is kept.
+      */
+    final case class Values(keys: Seq[Any]) extends SourceKeys
+    /** More keys than [[maxPrunedMergeKeys]]: their [lo, hi] range (NULL
+      * when no key is non-null) and whether a NULL key exists (`<=>` only).
+      */
+    final case class Range(lo: Any, hi: Any, hasNull: Boolean) extends SourceKeys
+  }
+
   /** Above this many touched partitions a pruned merge falls back to a
     * full overwrite: the per-partition commit bookkeeping and the isin
     * predicate stop paying for themselves when most of the table is
@@ -63,6 +95,71 @@ object Merge {
     * back from per-value overlap to the source's [min, max] range.
     */
   val maxPrunedMergeKeys: Int = 10000
+
+  /** Can bounds on column `name` (case-insensitive) of `base` skip files? */
+  private def skippableIn(base: ManagedTable.LogEntry, name: String): Boolean =
+    base.schema.fields.exists(f =>
+      f.name.equalsIgnoreCase(name) && FileStats.skippable(f.dataType))
+
+  /** One key collect: the distinct values of `k` over `frame`, or their
+    * range past [[maxPrunedMergeKeys]]; None when `frame` is empty.
+    *
+    * Under `=` a NULL key matches nothing, so NULL keys are filtered
+    * INSIDE the collect. That also lets Catalyst drop every branch whose
+    * key is a NULL literal — SCD2's staged_part_1, whose join against the
+    * target then never runs here. A non-empty frame without a non-NULL
+    * key yields `Values(Nil)`: its merge can only insert.
+    *
+    * Past the cap the distinct() sample may MISS a NULL (and min/max
+    * ignore NULLs), so under `<=>` the range aggregation also counts NULL
+    * keys — one job answers both questions; otherwise a file holding only
+    * NULL-key rows would be pruned and its matched updates silently
+    * skipped.
+    *
+    * A frame the optimizer reduces to local rows (a driver-side Seq, and
+    * projections or filters over one) is read on the driver: no Spark job.
+    */
+  private def collectKeys(frame: DataFrame, k: Column,
+                          nullSafe: Boolean): Option[SourceKeys] = {
+    val rows = if (nullSafe) frame else frame.filter(k.isNotNull)
+    val keyed = rows.select(k)
+    val vals =
+      if (keyed.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+        keyed.collect().map(_.get(0)).distinct
+      else keyed.distinct().limit(maxPrunedMergeKeys + 1).collect().map(_.get(0))
+    if (vals.isEmpty) {
+      if (nullSafe || frame.isEmpty) None else Some(SourceKeys.Values(Nil))
+    } else if (vals.length > maxPrunedMergeKeys && !(nullSafe && vals.contains(null))) {
+      val r = rows.agg(org.apache.spark.sql.functions.min(k),
+        org.apache.spark.sql.functions.max(k),
+        count(when(k.isNull, lit(1)))).head()
+      Some(SourceKeys.Range(r.get(0), r.get(1), r.getLong(2) > 0))
+    } else Some(SourceKeys.Values(vals.toSeq))
+  }
+
+  /** The pure pruning decision over `base`'s files from the keys collected
+    * for each (target column, null-safe) binding; a binding without keys
+    * does not prune.
+    */
+  private def prunePlan(base: ManagedTable.LogEntry, bindings: Seq[(String, Boolean)],
+                        keys: Seq[SourceKeys]): FilePrune = {
+    val schema = base.schema
+    val keyFilters: Seq[Seq[FileStat] => Seq[FileStat]] =
+      bindings.zip(keys).flatMap {
+        case ((name, nullSafe), SourceKeys.Values(vs))
+            if !(nullSafe && vs.contains(null)) =>
+          Some(FileStats.overlappingFilter(schema, name, vs))
+        case ((name, _), SourceKeys.Range(lo, hi, false)) if lo != null =>
+          Some((fs: Seq[FileStat]) =>
+            FileStats.overlappingRange(fs, schema, name, lo, hi))
+        // <=> with a NULL source key matches NULL target rows, whose
+        // files' min/max bounds cannot locate them: no pruning
+        case _ => None
+      }
+    val touched = keyFilters.foldLeft(base.files)((fs, f) => f(fs))
+    if (touched.size < base.files.size) FilePrune.Pruned(touched, keyFilters)
+    else FilePrune.Fallback
+  }
 
   sealed trait Clause { def condition: Option[String] }
   final case class Update(condition: Option[String], set: Map[String, String]) extends Clause
@@ -187,17 +284,26 @@ object Merge {
       * untouched partitions keep their existing files — the difference
       * between a 1-row SCD2 upsert rewriting one partition and rewriting
       * 100 TB (Delta's find-touched-files pruning, at partition
-      * granularity). Falls back to a full snapshot overwrite whenever
-      * pruning can't be proven safe (unbound partition columns, update/
-      * insert clauses that could move rows across partitions, or more
-      * than [[Merge.maxPrunedPartitions]] touched partitions).
-      */
-    /** The snapshot version this merge is computed against, captured at
-      * [[execute]] entry. Every commit path below passes it down so a
-      * concurrent commit landing mid-merge is REBASED over when provably
-      * disjoint (other partitions / other files) and raises
+      * granularity). Otherwise the merge-key bounds of each file prune at
+      * file granularity ([[executeFilePruned]]). Falls back to a full
+      * snapshot overwrite whenever pruning can't be proven safe (unbound
+      * partition columns, update/insert clauses that could move rows
+      * across partitions, more than [[Merge.maxPrunedPartitions]] touched
+      * partitions, no usable file stats).
+      *
+      * The snapshot the merge is computed against is captured once at
+      * entry and every commit path below passes it down, so a concurrent
+      * commit landing mid-merge is REBASED over when provably disjoint
+      * (other partitions / other files) and raises
       * [[ConcurrentCommitException]] otherwise — never a silent
       * last-writer-wins at the snapshot level.
+      *
+      * A nondeterministic source (`rand()`, `uuid()`, a nondeterministic
+      * UDF) is materialized once for the duration of the merge: the key
+      * collect and the write each evaluate the source, and two
+      * evaluations could prune by one key set and merge another (Delta's
+      * `merge.materializeSource=auto`). A source the caller has cached is
+      * used as is.
       */
     def execute(table: ManagedTable): Unit = {
       if (txn.exists { case (app, v) =>
@@ -215,19 +321,31 @@ object Merge {
           return
         }
       }
-      // One snapshot read: the entry the plan is built from IS the commit
-      // base, so a commit landing mid-merge can never make the pruning
-      // analysis (newer snapshot) disagree with the conflict check (older
-      // base) — which would raise a spurious ConcurrentCommitException.
-      val base = table.latestEntry
+      if (source.queryExecution.analyzed.deterministic ||
+          source.storageLevel != StorageLevel.NONE)
+        executeAt(table, table.latestEntry)
+      else {
+        val once = source.persist(StorageLevel.MEMORY_AND_DISK)
+        try copy(source = once).executeAt(table, table.latestEntry)
+        finally { once.unpersist(); () }
+      }
+    }
+
+    /** [[execute]] against the snapshot `base`, which is both the plan's
+      * read and the commit base: a commit landing mid-merge can never make
+      * the pruning analysis (newer snapshot) disagree with the conflict
+      * check (older base), which would raise a spurious
+      * ConcurrentCommitException.
+      */
+    private[tables] def executeAt(table: ManagedTable,
+                                  base: ManagedTable.LogEntry): Unit = {
       val baseVersion = base.version
       if (notMatchedBySource.nonEmpty) {
         // pruning is keyed off the MATCHED side; a bySource clause can
         // touch an unmatched row in ANY file or partition, so keeping
         // files/partitions verbatim is unsound — the merge is a full
         // rewrite by semantics (Delta pays the same shape)
-        table.overwriteFrom(baseVersion, run(), "MERGE",
-          cdc = cdcFor(table, base), txn = txn)
+        overwriteAt(table, base)
         return
       }
       val parts = base.partitionColumns
@@ -250,9 +368,7 @@ object Merge {
         if (!suffixSafe) {
           // timestamp/decimal partition columns can't partition-prune,
           // but the merge keys' file bounds may still prune
-          if (!executeFilePruned(table, base))
-            table.overwriteFrom(baseVersion, run(), "MERGE",
-              cdc = cdcFor(table, base), txn = txn)
+          if (!executeFilePruned(table, base)) overwriteAt(table, base)
           return
         }
         val valueCols = parts.map(p => GraftColumnBridge.column(bindings(p)).as(p))
@@ -261,9 +377,7 @@ object Merge {
         if (rows.isEmpty) return // empty source: merge is a no-op
         if (rows.length > maxPrunedPartitions) {
           // too many partitions to enumerate; fall to file granularity
-          if (!executeFilePruned(table, base))
-            table.overwriteFrom(baseVersion, run(), "MERGE",
-              cdc = cdcFor(table, base), txn = txn)
+          if (!executeFilePruned(table, base)) overwriteAt(table, base)
           return
         }
         val values = rows.map(r =>
@@ -284,13 +398,14 @@ object Merge {
         table.overwritePartitions(pruned.run(), values, operation = "MERGE",
           baseVersion = baseVersion, cdc = pruned.cdcFor(table, base),
           txn = txn)
-      } else if (executeFilePruned(table, base)) {
-        // file-granular path committed (or proved the merge a no-op)
-      } else {
-        table.overwriteFrom(baseVersion, run(), "MERGE",
-              cdc = cdcFor(table, base), txn = txn)
-      }
+      } else if (!executeFilePruned(table, base)) overwriteAt(table, base)
     }
+
+    /** The full-snapshot rewrite every unprunable merge commits. */
+    private[tables] def overwriteAt(table: ManagedTable,
+                                    base: ManagedTable.LogEntry): Unit =
+      table.overwriteFrom(base.version, run(), "MERGE",
+        cdc = cdcFor(table, base), txn = txn)
 
     /** File-granular MERGE (Delta's find-touched-files): files whose
       * min/max bounds on an equi-bound merge-key column are disjoint from
@@ -305,11 +420,11 @@ object Merge {
       * so keeping their files is the same result by construction —
       * updates/inserts always land in new files.
       * Returns false (caller falls back to a full overwrite) when the
-      * table has no stats, no conjunct equi-binds a skippable column, the
-      * source is too large to enumerate, or pruning removes nothing.
+      * table has no stats, no conjunct equi-binds a skippable column, or
+      * pruning removes nothing.
       *
-      * Assumes `target` is the table's current snapshot (as every
-      * `execute` path does — the pruned target is re-read from the table).
+      * Assumes `target` is the snapshot `base` (as every `execute` path
+      * does — the pruned target is re-read from `base`).
       */
     private def executeFilePruned(table: ManagedTable,
                                   base: ManagedTable.LogEntry): Boolean =
@@ -317,21 +432,27 @@ object Merge {
         case FilePrune.NoOp => true
         case FilePrune.Fallback => false
         case FilePrune.Pruned(touched, keyFilters) =>
-          val touchedSet = touched.map(_.path).toSet
-          val pruned = copy(target = table.scanFilesDF(touched, base))
-          val result = pruned.run()
-          // Delta's ConcurrentAppendException rule, made precise: a
-          // concurrently-added file conflicts only if this merge WOULD
-          // have read it — i.e. it survives the same key-bounds filters
-          // that selected the touched files. A blind append with
-          // provably-disjoint key bounds commutes (both commits land).
-          table.replaceFiles(touchedSet, result, operation = "MERGE",
-            base = base,
-            addedMayMatch = added =>
-              keyFilters.foldLeft(added)((fs, f) => f(fs)).nonEmpty,
-            cdc = pruned.cdcFor(table, base), txn = txn)
+          copy(target = table.scanFilesDF(touched, base))
+            .commitPruned(table, base, touched, keyFilters)
           true
       }
+
+    /** Commit this merge — its target already narrowed to `touched` —
+      * as a rewrite of just those files against `base`.
+      */
+    private[tables] def commitPruned(table: ManagedTable, base: ManagedTable.LogEntry,
+                                     touched: Seq[FileStat],
+                                     keyFilters: Seq[Seq[FileStat] => Seq[FileStat]]): Unit =
+      // Delta's ConcurrentAppendException rule, made precise: a
+      // concurrently-added file conflicts only if this merge WOULD have
+      // read it — i.e. it survives the same key-bounds filters that
+      // selected the touched files. A blind append with provably-disjoint
+      // key bounds commutes (both commits land).
+      table.replaceFiles(touched.map(_.path).toSet, run(), operation = "MERGE",
+        base = base,
+        addedMayMatch = added =>
+          keyFilters.foldLeft(added)((fs, f) => f(fs)).nonEmpty,
+        cdc = cdcFor(table, base), txn = txn)
 
     /** The file-granular pruning decision, separated from the commit so the
       * conflict predicate it implies is unit-testable: NoOp (empty source —
@@ -339,59 +460,42 @@ object Merge {
       * usable equi-binding, or pruning removed nothing), or Pruned with the
       * surviving files AND the per-binding bounds filters that selected
       * them (reused as `addedMayMatch` against concurrent appends).
+      * One source pass ([[sourceKeys]]) feeds the pure [[prunePlan]].
       */
     private[tables] def filePrunePlan(base: ManagedTable.LogEntry): FilePrune = {
-      val files = base.files
-      if (files.size < 2) return FilePrune.Fallback
-      val schema = base.schema
-      val usable = equiBindings.filter { case (name, _, _) =>
-        schema.fields.exists(f => f.name.equalsIgnoreCase(name) &&
-          FileStats.skippable(f.dataType))
-      }
-      if (usable.isEmpty) return FilePrune.Fallback
-      var touched = files
-      var pruned = false
-      val keyFilters = Seq.newBuilder[Seq[FileStat] => Seq[FileStat]]
-      // cumulative pruning over the first two usable bindings (each costs
-      // one small driver-side collect of the source's key values)
-      usable.take(2).foreach { case (name, srcExpr, nullSafe) =>
-        val kCol = GraftColumnBridge.column(srcExpr)
-        val vals = source.alias(sourceAlias)
-          .select(kCol)
-          .distinct().limit(maxPrunedMergeKeys + 1).collect().map(_.get(0))
-        if (vals.isEmpty) return FilePrune.NoOp // empty source: no-op merge
-        // <=> with a NULL source key matches NULL target rows, whose files'
-        // min/max bounds cannot locate — such a binding can't prune.
-        if (nullSafe && vals.contains(null)) {
-          // this binding can't prune (see above)
-        } else if (vals.length > maxPrunedMergeKeys) {
-          // Too many keys to enumerate: prune by the source's key RANGE.
-          // Past the enumeration cap the distinct() sample may MISS a NULL
-          // (and min/max ignore NULLs), so under <=> the same aggregation
-          // also counts NULL keys — one job answers both questions;
-          // otherwise a file holding only NULL-key rows would be pruned
-          // and its matched updates silently skipped.
-          val r = source.alias(sourceAlias)
-            .agg(org.apache.spark.sql.functions.min(kCol),
-              org.apache.spark.sql.functions.max(kCol),
-              count(when(kCol.isNull, lit(1)))).head()
-          val nullSafeNullKey = nullSafe && r.getLong(2) > 0
-          if (!nullSafeNullKey && !r.isNullAt(0)) {
-            val lo = r.get(0)
-            val hi = r.get(1)
-            keyFilters += (fs => FileStats.overlappingRange(fs, schema, name, lo, hi))
-            val next = FileStats.overlappingRange(touched, schema, name, lo, hi)
-            if (next.size < touched.size) { touched = next; pruned = true }
+      val bindings = pruneBindings(base)
+      if (bindings.isEmpty) FilePrune.Fallback
+      else sourceKeys(bindings).fold[FilePrune](FilePrune.NoOp)(keys =>
+        prunePlan(base, bindings.map { case (n, _, nullSafe) => (n, nullSafe) }, keys))
+    }
+
+    /** The equi-bindings file pruning uses: the first two whose target
+      * column is skippable (each costs one key collect); none when the
+      * snapshot has fewer than two files (nothing to skip).
+      */
+    private def pruneBindings(base: ManagedTable.LogEntry): Seq[(String, CatExpr, Boolean)] =
+      if (base.files.size < 2) Nil
+      else equiBindings.filter { case (name, _, _) => skippableIn(base, name) }.take(2)
+
+    /** The source pass of the pruning decision: the keys of each binding
+      * ([[collectKeys]]); None when the source is empty (the merge is a
+      * no-op). A binding whose source holds only NULL keys under `=`
+      * matches nothing, so it prunes every file and later bindings are
+      * not collected.
+      */
+    private def sourceKeys(bindings: Seq[(String, CatExpr, Boolean)]): Option[Seq[SourceKeys]] = {
+      val src = source.alias(sourceAlias)
+      def loop(rest: List[(String, CatExpr, Boolean)],
+               acc: Vector[SourceKeys]): Option[Seq[SourceKeys]] = rest match {
+        case Nil => Some(acc)
+        case (_, srcExpr, nullSafe) :: more =>
+          collectKeys(src, GraftColumnBridge.column(srcExpr), nullSafe) match {
+            case None => None
+            case Some(k @ SourceKeys.Values(Seq())) => Some(acc :+ k)
+            case Some(k) => loop(more, acc :+ k)
           }
-        } else {
-          val nonNull = vals.filter(_ != null).toSeq
-          keyFilters += (fs => FileStats.overlapping(fs, schema, name, nonNull))
-          val next = FileStats.overlapping(touched, schema, name, nonNull)
-          if (next.size < touched.size) { touched = next; pruned = true }
-        }
       }
-      if (!pruned) FilePrune.Fallback
-      else FilePrune.Pruned(touched, keyFilters.result())
+      loop(bindings.toList, Vector.empty)
     }
 
     /** Every conjunct of the merge condition equi-binding a target column
@@ -486,100 +590,76 @@ object Merge {
 
     // -- implementation --------------------------------------------------
 
-    /** Row-identity column. `monotonically_increasing_id` is deterministic
-      * for a fixed scan partitioning (partitionId << 33 | offset), which
-      * holds within one action over an immutable parquet snapshot; Delta
-      * itself identifies touched rows by (file, rowIndex) — the same idea.
+    /** Target row id. `monotonically_increasing_id` is deterministic for a
+      * fixed scan partitioning (partitionId << 33 | offset), which holds
+      * within one action over an immutable parquet snapshot; Delta itself
+      * identifies touched rows by (file, rowIndex) — the same idea.
       */
     private val RID = "__graft_merge_rid"
+    /** Source row id: NULL on target-only rows of the outer join. */
+    private val SID = "__graft_merge_sid"
+    private val Cls = "__graft_clause"
+    private val MatchN = "__graft_match_n"
 
-    private val mIdx = "__graft_clause"
+    // One clause index across the three classes: whenMatched clauses are
+    // 0 until M, whenNotMatchedBySource M until M+B, whenNotMatched after.
+    private def bySourceBase: Int = matched.length
+    private def insertBase: Int = matched.length + notMatchedBySource.length
 
-    // first-matching-clause index over the matched pairs (NULL = no clause)
-    private def clauseIdx(clauses: Seq[Clause]): Column =
+    // index of the first applicable clause (NULL = none applies)
+    private def clauseIdx(clauses: Seq[Clause], offset: Int): Column =
       clauses.zipWithIndex.foldRight(lit(null).cast("int")) {
         case ((c, i), acc) =>
           c.condition match {
-            case Some(cond) => when(expr(cond), lit(i)).otherwise(acc)
-            case None       => lit(i) // unconditional: always matches from here
+            case Some(cond) => when(expr(cond), lit(offset + i)).otherwise(acc)
+            case None       => lit(offset + i) // unconditional: always matches from here
           }
       }
 
-    /** Matched (target, source) pairs classified by first applicable
-      * `whenMatched` clause (`mIdx` NULL = pass-through). Multi-match
-      * detection (Delta's multiple-source-row-match error) is folded in:
-      * a window count per target row id plus an in-plan assertion. One
-      * job, no extra scan of the target — the shuffle is only over the
-      * matched pairs (≈ the touched rows), which is the small side of a
-      * merge at scale. The assertion rides in a filter predicate so
-      * column pruning cannot drop it.
+    private def indices(clauses: Seq[Clause], offset: Int)
+                       (pick: Clause => Boolean): Seq[Int] =
+      clauses.zipWithIndex.collect { case (c, i) if pick(c) => offset + i }
+
+    private def isDelete(c: Clause) = c.isInstanceOf[Delete]
+    private def isUpdate(c: Clause) =
+      c.isInstanceOf[Update] || c.isInstanceOf[UpdateAll]
+
+    private def deleteIdxs: Seq[Int] =
+      indices(matched, 0)(isDelete) ++
+        indices(notMatchedBySource, bySourceBase)(isDelete)
+
+    // NULL-safe membership: a row without a clause is in no set
+    private def clauseIn(idxs: Seq[Int]): Column =
+      if (idxs.isEmpty) lit(false)
+      else coalesce(col(Cls).isin(idxs: _*), lit(false))
+
+    /** The one classification both the result and the CDC sidecar read:
+      * the outer join of target (tagged `RID`) and source (tagged `SID`)
+      * plus the index `Cls` of each row's first applicable clause, and the
+      * row filter every output starts from. The filter drops source-only
+      * rows no insert clause claims and checks each target row's matches,
+      * counted by one window: with whenMatched clauses a target row matched
+      * by more than one source row fails an in-plan assertion (leftmost in
+      * the filter, so it sees every row, and in a filter predicate so
+      * column pruning cannot drop it); an insert-only merge instead keeps
+      * one pair per matched target row, which then passes through once
+      * (Delta passes such rows through once and skips the multi-match
+      * error when no whenMatched clause exists).
+      *
+      * When the merge condition is a conjunction of equi-bindings
+      * ([[sourceMatchKeys]]) the window runs on the SOURCE, partitioned by
+      * its key values — the partitioning the join shuffles the source by
+      * anyway, so it costs no extra shuffle — and counts the source rows
+      * sharing a key, which is the match count of every target row a
+      * source row matches. Otherwise it runs over the joined rows, one
+      * partition per target row (a source-only row alone, so those never
+      * pile into one partition).
       */
-    private def classifiedMatches(t: DataFrame, s: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col(RID))
-      t.join(s, mergeCondition, "inner")
-        .withColumn("__graft_match_n", count(lit(1)).over(w))
-        .filter(assert_true(col("__graft_match_n") <= 1,
-          lit("MERGE: a target row was matched by multiple source rows; " +
-            "the merge condition must identify at most one source row " +
-            "per target row")).isNull)
-        .drop("__graft_match_n")
-        .withColumn(mIdx, clauseIdx(matched))
-    }
-
-    // matched rows: per-clause rewrite, unchanged when no clause applies
-    private def targetColumn(name: String): Column = {
-      val base = col(s"$targetAlias.$name")
-      matched.zipWithIndex.foldLeft(base) { case (acc, (cl, i)) =>
-        cl match {
-          case Update(_, set) =>
-            val e = set.get(name).map(expr).getOrElse(base)
-            when(col(mIdx) === i, e).otherwise(acc)
-          case UpdateAll(_) =>
-            when(col(mIdx) === i, col(s"$sourceAlias.$name")).otherwise(acc)
-          case Delete(_) => acc // handled by filter in run()
-          case _ => acc
-        }
-      }
-    }
-
-    /** Source rows with no target match, projected through the first
-      * applicable insert clause.
-      */
-    private def insertedFrame(t: DataFrame, s: DataFrame,
-                              targetCols: Seq[String]): DataFrame =
-      if (notMatched.isEmpty) emptyLike(targetCols)
-      else {
-        val unmatchedSrc = s.join(t, mergeCondition, "left_anti")
-        val idx = unmatchedSrc.withColumn(mIdx, clauseIdx(notMatched))
-          .filter(col(mIdx).isNotNull)
-        val perClause = notMatched.zipWithIndex.map {
-          case (Insert(_, values), i) =>
-            idx.filter(col(mIdx) === i).select(targetCols.map { c =>
-              values.get(c).map(expr).getOrElse(lit(null)).as(c)
-            }: _*)
-          case (InsertAll(_), i) =>
-            idx.filter(col(mIdx) === i).select(targetCols.map { c =>
-              col(s"$sourceAlias.$c").as(c)
-            }: _*)
-          case (other, _) =>
-            throw new IllegalArgumentException(
-              s"whenNotMatched only supports insert clauses, got $other")
-        }
-        perClause.reduce(_ unionByName _)
-      }
-
-    // align frame types to the target schema
-    private def align(df: DataFrame): DataFrame = {
-      val schema = target.schema
-      df.select(schema.fields.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    }
-
-    private def run(): DataFrame = {
+    private def classified(): (DataFrame, Column) = {
       val targetCols = target.columns.toSeq
       // Delta's analyzer rejects clause columns the target lacks unless
       // schema evolution is on (they would otherwise be silently dropped
-      // by the name-keyed projections below)
+      // by the name-keyed projection)
       val unknown = (matched.collect { case Update(_, set) => set.keys } ++
         notMatchedBySource.collect { case Update(_, set) => set.keys } ++
         notMatched.collect { case Insert(_, values) => values.keys })
@@ -588,151 +668,180 @@ object Merge {
         throw new graft.GraftTypeError(
           s"MERGE clause refers to columns not in the target table: " +
             s"${unknown.mkString(", ")} (use withSchemaEvolution() to add them)")
-      val t = target.withColumn(RID, monotonically_increasing_id()).alias(targetAlias)
-      val s = source.alias(sourceAlias)
-
-      val rewritten: DataFrame = if (matched.isEmpty) {
-        // Insert-only merge: matched target rows pass through unchanged,
-        // exactly once each — a left_semi join, NOT the inner-join pairs
-        // (which would emit a target row once per matching source row;
-        // Delta passes such rows through once and skips the multi-match
-        // error when no whenMatched clause exists).
-        t.join(s, mergeCondition, "left_semi").select(targetCols.map(col): _*)
-      } else {
-        val classified = classifiedMatches(t, s)
-        val deleteIdxs = matched.zipWithIndex.collect { case (Delete(_), i) => i }
-        val kept = deleteIdxs.foldLeft(classified) { (df, i) =>
-          df.filter(col(mIdx).isNull || col(mIdx) =!= i)
-        }
-        kept.select(targetCols.map(c => targetColumn(c).as(c)): _*)
-      }
-
-      val untouched = untouchedFrame(t, s, targetCols)
-
-      val inserted = insertedFrame(t, s, targetCols)
-
-      align(untouched).union(align(rewritten)).union(align(inserted))
+      notMatched.find(c => !c.isInstanceOf[Insert] && !c.isInstanceOf[InsertAll])
+        .foreach(c => throw new IllegalArgumentException(
+          s"whenNotMatched only supports insert clauses, got $c"))
+      // count the matches, or rank them for the insert-only pass-through
+      def matchWindow(w: org.apache.spark.sql.expressions.WindowSpec,
+                      order: Seq[Column]): Column =
+        if (matched.nonEmpty) count(lit(1)).over(w)
+        else row_number().over(w.orderBy(order: _*))
+      val t = target.select(col("*"), monotonically_increasing_id().as(RID))
+        .alias(targetAlias)
+      val sa = source.alias(sourceAlias)
+      val keys = sourceMatchKeys(sa)
+      val s = sa.select(Seq(col("*"), monotonically_increasing_id().as(SID)) ++
+          keys.map(ks => matchWindow(Window.partitionBy(ks: _*), ks).as(MatchN)): _*)
+        .alias(sourceAlias)
+      val isMatched = col(RID).isNotNull && col(SID).isNotNull
+      val cls = when(isMatched, clauseIdx(matched, 0))
+        .when(col(RID).isNull, clauseIdx(notMatched, insertBase))
+        .otherwise(clauseIdx(notMatchedBySource, bySourceBase))
+      val joined = t.join(s, mergeCondition,
+        if (notMatched.isEmpty) "left_outer" else "full_outer")
+      // RIDs are >= 0, so a source-only row's key -1 - SID never collides
+      val perTarget = Window.partitionBy(coalesce(col(RID), lit(-1L) - col(SID)))
+      val c = joined.select(Seq(col("*"), cls.as(Cls)) ++
+        (if (keys.isEmpty) Seq(matchWindow(perTarget, Seq(col(SID))).as(MatchN))
+         else Nil): _*)
+      val matchOk =
+        if (matched.nonEmpty)
+          assert_true(!isMatched || col(MatchN) <= 1,
+            lit("MERGE: a target row was matched by multiple source rows; " +
+              "the merge condition must identify at most one source row " +
+              "per target row")).isNull
+        else !isMatched || col(MatchN) === 1
+      (c, matchOk && (col(RID).isNotNull || col(Cls).isNotNull))
     }
 
-    /** Target rows with no source match: pass through verbatim, unless
-      * `whenNotMatchedBySource` clauses classify them (first applicable
-      * clause wins, like the matched side) — deletes drop, updates
-      * rewrite from target columns only.
+    /** The source-side key expressions of the merge condition when EVERY
+      * conjunct equi-binds a target column to a deterministic source
+      * expression of the same type. A target row then matches exactly the
+      * source rows whose key values equal its own, so the source rows
+      * sharing a key count the matches of every target row they match.
+      * None for any other condition (and under a type coercion, where the
+      * join could equate values the window would keep apart).
       */
-    private def untouchedFrame(t: DataFrame, s: DataFrame,
-                               targetCols: Seq[String]): DataFrame = {
-      val untouched = t.join(s, mergeCondition, "left_anti")
-      if (notMatchedBySource.isEmpty)
-        untouched.select(targetCols.map(col): _*)
+    private def sourceMatchKeys(sa: DataFrame): Option[Seq[Column]] = {
+      val bindings = equiBindings
+      if (bindings.isEmpty || bindings.length !=
+            conjuncts(GraftColumnBridge.parsedExpression(mergeCondition)).length) None
       else {
-        val idx = untouched.withColumn(mIdx, clauseIdx(notMatchedBySource))
-        val deleteIdxs = notMatchedBySource.zipWithIndex.collect {
-          case (Delete(_), i) => i
+        val ks = bindings.map { case (_, e, _) => GraftColumnBridge.column(e) }
+        val probe = sa.select(ks: _*)
+        val sameTypes = bindings.zip(probe.schema.fields).forall {
+          case ((name, _, _), f) =>
+            target.schema.fields.find(_.name.equalsIgnoreCase(name))
+              .exists(_.dataType == f.dataType)
         }
-        val kept = deleteIdxs.foldLeft(idx) { (df, i) =>
-          df.filter(col(mIdx).isNull || col(mIdx) =!= i)
-        }
-        kept.select(targetCols.map(c => bySourceColumn(c).as(c)): _*)
+        if (sameTypes && probe.queryExecution.analyzed.deterministic) Some(ks)
+        else None
       }
     }
 
-    // untouched rows: per-bySource-clause rewrite (target columns only)
-    private def bySourceColumn(name: String): Column = {
-      val base = col(s"$targetAlias.$name")
-      notMatchedBySource.zipWithIndex.foldLeft(base) { case (acc, (cl, i)) =>
-        cl match {
-          case Update(_, set) =>
-            val e = set.get(name).map(expr).getOrElse(base)
-            when(col(mIdx) === i, e).otherwise(acc)
-          case _ => acc // Delete handled by filter in untouchedFrame
+    // the target row as read, aligned to the target schema
+    private def preImage: Seq[Column] = target.schema.fields.toSeq.map(f =>
+      col(s"$targetAlias.${f.name}").cast(f.dataType).as(f.name))
+
+    /** The written row: each column through the clause `Cls` names (its
+      * set/values expression, the source column under updateAll/insertAll,
+      * NULL for an insert that omits it), else the target value — which
+      * is also how a row no clause applies to passes through.
+      */
+    private def postImage: Seq[Column] = target.schema.fields.toSeq.map { f =>
+      val c = f.name
+      val branches: Seq[(Int, Column)] =
+        matched.zipWithIndex.flatMap {
+          case (Update(_, set), i) => set.get(c).map(e => i -> expr(e))
+          case (UpdateAll(_), i) => Some(i -> col(s"$sourceAlias.$c"))
+          case _ => None // Delete: dropped by the filter in run()
+        } ++ notMatchedBySource.zipWithIndex.flatMap {
+          case (Update(_, set), i) => set.get(c).map(e => (bySourceBase + i) -> expr(e))
+          case _ => None
+        } ++ notMatched.zipWithIndex.collect {
+          case (Insert(_, values), i) =>
+            (insertBase + i) -> values.get(c).map(expr).getOrElse(lit(null))
+          case (InsertAll(_), i) => (insertBase + i) -> col(s"$sourceAlias.$c")
         }
+      val pre = col(s"$targetAlias.$c").cast(f.dataType)
+      val post = branches match {
+        case Seq() => pre
+        case (i0, e0) +: rest =>
+          rest.foldLeft(when(col(Cls) === i0, e0.cast(f.dataType))) {
+            case (acc, (i, e)) => acc.when(col(Cls) === i, e.cast(f.dataType))
+          }.otherwise(pre)
       }
+      post.as(c)
+    }
+
+    private def run(): DataFrame = {
+      val (c, ok) = classified()
+      c.filter(ok && !clauseIn(deleteIdxs)).select(postImage: _*)
     }
 
     /** The labeled net change rows this merge produces (Delta CDF's MERGE
       * semantics — richer than the snapshot-diff derivation, which can
       * only approximate update rows as delete+insert pairs):
-      * Delete-clause matches surface their pre-image as `'delete'`,
-      * Update/UpdateAll matches their net pre/post pair as
+      * Delete-clause rows (matched or bySource) surface their pre-image as
+      * `'delete'`, Update/UpdateAll rows their net pre/post pair as
       * `'update_preimage'`/`'update_postimage'` (value-identical rewrites
-      * cancel, the same rule as the DML capture), insert clauses as
-      * `'insert'`. Pass-through rows (no clause applies) emit nothing —
-      * they cancel in the derivation too, so sidecar ≡ derived feed as
-      * multisets modulo the update labels. Built from the same join
-      * classification as the result; an extra bounded pass over the
-      * (pruned) target, run only when the table captures CDC.
+      * cancel, the same rule as the DML capture; netted per class),
+      * insert clauses as `'insert'`. Pass-through rows (no clause applies)
+      * emit nothing — they cancel in the derivation too, so sidecar ≡
+      * derived feed as multisets modulo the update labels. Read from the
+      * same classified frame as the result; an extra bounded pass over
+      * the (pruned) target, run only when the table captures CDC.
       */
     private def changesFrame(): DataFrame = {
-      val targetCols = target.columns.toSeq
-      val ct = "_change_type"
-      val t = target.withColumn(RID, monotonically_increasing_id()).alias(targetAlias)
-      val s = source.alias(sourceAlias)
-      val inserted = align(insertedFrame(t, s, targetCols))
-        .withColumn(ct, lit("insert"))
-      // bySource clauses change UNMATCHED rows — capture their deletes
-      // and net pre/post pairs from the same anti-join classification
-      val bySource: Seq[DataFrame] =
-        if (notMatchedBySource.isEmpty) Nil
+      val (c, ok) = classified()
+      def labeled(df: DataFrame, label: String) =
+        df.withColumn("_change_type", lit(label))
+      def net(idxs: Seq[Int]): Seq[DataFrame] =
+        if (idxs.isEmpty) Nil
         else {
-          val idx = t.join(s, mergeCondition, "left_anti")
-            .withColumn(mIdx, clauseIdx(notMatchedBySource))
-          val delIdxs = notMatchedBySource.zipWithIndex.collect {
-            case (Delete(_), i) => i
-          }
-          val updIdxs = notMatchedBySource.zipWithIndex.collect {
-            case (Update(_, _), i) => i
-          }
-          val dels =
-            if (delIdxs.isEmpty) Nil
-            else Seq(align(idx.filter(col(mIdx).isin(delIdxs: _*))
-                .select(targetCols.map(c => col(s"$targetAlias.$c").as(c)): _*))
-              .withColumn(ct, lit("delete")))
-          val upds =
-            if (updIdxs.isEmpty) Nil
-            else {
-              val u = idx.filter(col(mIdx).isin(updIdxs: _*))
-              val pre = align(u.select(
-                targetCols.map(c => col(s"$targetAlias.$c").as(c)): _*))
-              val post = align(u.select(
-                targetCols.map(c => bySourceColumn(c).as(c)): _*))
-              Seq(post.exceptAll(pre).withColumn(ct, lit("update_postimage"))
-                .unionByName(
-                  pre.exceptAll(post).withColumn(ct, lit("update_preimage"))))
-            }
-          dels ++ upds
+          val u = c.filter(ok && clauseIn(idxs))
+          val pre = u.select(preImage: _*)
+          val post = u.select(postImage: _*)
+          Seq(labeled(post.exceptAll(pre), "update_postimage"),
+            labeled(pre.exceptAll(post), "update_preimage"))
         }
-      if (matched.isEmpty)
-        return (bySource :+ inserted).reduce(_ unionByName _)
-      val classified = classifiedMatches(t, s)
-      val deleteIdxs = matched.zipWithIndex.collect { case (Delete(_), i) => i }
-      val updateIdxs = matched.zipWithIndex.collect {
-        case (Update(_, _), i) => i
-        case (UpdateAll(_), i) => i
-      }
       val deleted =
-        if (deleteIdxs.isEmpty) None
-        else Some(align(classified.filter(col(mIdx).isin(deleteIdxs: _*))
-            .select(targetCols.map(c => col(s"$targetAlias.$c").as(c)): _*))
-          .withColumn(ct, lit("delete")))
-      val updated =
-        if (updateIdxs.isEmpty) None
-        else {
-          val upd = classified.filter(col(mIdx).isin(updateIdxs: _*))
-          val pre = align(upd.select(
-            targetCols.map(c => col(s"$targetAlias.$c").as(c)): _*))
-          val post = align(upd.select(
-            targetCols.map(c => targetColumn(c).as(c)): _*))
-          Some(post.exceptAll(pre).withColumn(ct, lit("update_postimage"))
-            .unionByName(pre.exceptAll(post).withColumn(ct, lit("update_preimage"))))
-        }
-      (deleted.toSeq ++ updated.toSeq ++ bySource :+ inserted)
+        if (deleteIdxs.isEmpty) Nil
+        else Seq(labeled(c.filter(ok && clauseIn(deleteIdxs)).select(preImage: _*),
+          "delete"))
+      val inserted = labeled(c.filter(ok && clauseIn(indices(notMatched, insertBase)(_ => true)))
+        .select(postImage: _*), "insert")
+      (deleted ++ net(indices(matched, 0)(isUpdate)) ++
+        net(indices(notMatchedBySource, bySourceBase)(isUpdate)) :+ inserted)
         .reduce(_ unionByName _)
     }
+  }
 
-    private def emptyLike(cols: Seq[String]): DataFrame = {
-      import org.apache.spark.sql.Row
-      target.sparkSession.createDataFrame(
-        target.sparkSession.sparkContext.emptyRDD[Row], target.schema)
+  /** [[Builder.execute]] for a merge whose SOURCE also reads the target —
+    * SCD2's staged updates join the base to find the versions to close.
+    * `stage` builds the merge over a given target frame, and `keys` is a
+    * one-column frame whose values are the source's values of the merge's
+    * `=` binding of target column `keyColumn` (NULLs and duplicates
+    * ignored; empty exactly when the source is).
+    *
+    * One snapshot, one key pass: `keys` alone drives the file-pruning
+    * decision, and the merge is then staged ONCE — over just the touched
+    * files when pruning applies (so its source's own read of the target
+    * touches only them too), else over the full snapshot. The staging
+    * read, the merge's target read and the commit base are the same log
+    * entry. The caller guarantees that the source's use of the target
+    * depends only on target rows whose key is among `keys` (the rows the
+    * touched files hold), and that the merge carries no transaction
+    * marker and no schema evolution. Partitioned tables, tables without
+    * usable stats and nondeterministic keys take the general path.
+    */
+  private[graft] def executeStaged(table: ManagedTable, keyColumn: String,
+                                   keys: DataFrame)(stage: DataFrame => Builder): Unit = {
+    val base = table.latestEntry
+    def full = stage(table.snapshotDF(base))
+    if (!keys.queryExecution.analyzed.deterministic)
+      full.execute(table) // materializes the source once
+    else if (base.partitionColumns.nonEmpty || base.files.size < 2 ||
+             !skippableIn(base, keyColumn))
+      full.executeAt(table, base)
+    else collectKeys(keys, keys.col(keys.columns.head), nullSafe = false) match {
+      case None => () // no source rows: the merge is a no-op
+      case Some(k) => prunePlan(base, Seq(keyColumn -> false), Seq(k)) match {
+        case FilePrune.Pruned(touched, keyFilters) =>
+          stage(table.scanFilesDF(touched, base))
+            .commitPruned(table, base, touched, keyFilters)
+        case _ => full.overwriteAt(table, base)
+      }
     }
   }
 

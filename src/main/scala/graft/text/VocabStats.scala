@@ -250,14 +250,15 @@ object VocabStats {
                    discount: Double = 0.75): DataFrame =
     knNllFromModel(fitKnModel(df, textCol), df, idCol, textCol, discount)
 
-  /** The words → positional-transform bigram/trigram extraction shared
-    * by [[fitKnModel]] and [[knNllFromModel]] (no positional
-    * self-joins — each n-gram is built inside one `transform` over the
-    * words array).
+  /** The words → positional-transform trigram extraction shared by
+    * [[fitKnModel]] and [[knNllFromModel]] (no positional self-joins —
+    * each trigram is built inside one `transform` over the words array).
+    * Returns (trigram stream, tokenized corpus); every bigram count the
+    * model needs derives from the trigram type table.
     */
   private def knGrams(df: DataFrame, idCol: String, textCol: String,
                       persistWs: Boolean)
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) = {
     // in the FIT the trigram stream AND the bigram-derivation's
     // doc-mass boundary stream read the tokenized corpus — persist it
     // once there (the caller unpersists when its tables materialize);
@@ -265,11 +266,6 @@ object VocabStats {
     // so a cache would be a pure leak — skip it
     val ws0 = df.select(col(idCol), words(col(textCol)).as("__ws"))
     val ws = if (persistWs) ws0.persist() else ws0
-    val bg = ws.select(col(idCol), explode(transform(
-        slice(col("__ws"), lit(1), greatest(size(col("__ws")) - 1, lit(0))),
-        (w, i) => struct(w.as("w1"),
-          element_at(col("__ws"), i + 2).as("w2")))).as("__bg"))
-      .select(col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2"))
     val tg = ws.select(col(idCol), explode(transform(
         slice(col("__ws"), lit(1), greatest(size(col("__ws")) - 2, lit(0))),
         (w, i) => struct(w.as("w1"),
@@ -277,7 +273,7 @@ object VocabStats {
           element_at(col("__ws"), i + 3).as("w3")))).as("__tg"))
       .select(col(idCol), col("__tg.w1").as("__w1"),
         col("__tg.w2").as("__w2"), col("__tg.w3").as("__w3"))
-    (bg, tg, ws)
+    (tg, ws)
   }
 
   /** FIT the interpolated-KN trigram model ONCE as a persistable table —
@@ -301,7 +297,7 @@ object VocabStats {
     */
   def fitKnModel(df: DataFrame, textCol: String): DataFrame = {
     val idCol = "__kn_id"
-    val (_, tg, ws) =
+    val (tg, ws) =
       knGrams(df.withColumn(idCol, lit(0L)), idCol, textCol,
         persistWs = true)
     // tcnt is the fit's ONE token-mass explode + groupBy (persisted:
@@ -383,7 +379,7 @@ object VocabStats {
     require(discount > 0.0 && discount < 1.0,
       s"need 0 < discount < 1, got $discount")
     val d = lit(discount)
-    val (_, tg, _) = knGrams(df, idCol, textCol, persistWs = false)
+    val (tg, _) = knGrams(df, idCol, textCol, persistWs = false)
     val m = model.select(col("w1").as("__w1"), col("w2").as("__w2"),
       col("w3").as("__w3"), col("c3").as("__c3"), col("ch").as("__ch"),
       col("n3f").as("__n3f"), col("cc2").as("__cc2"),

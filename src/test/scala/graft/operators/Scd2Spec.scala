@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.{GraftTypeError, SparkSpec}
 import graft.tables.ManagedTable
 
@@ -159,5 +160,70 @@ class Scd2Spec extends SparkSpec {
     assertThrows[GraftTypeError](
       Scd2(base, updates.withColumn("extra", org.apache.spark.sql.functions.lit(1)),
         "pkey", Seq("attr")))
+  }
+
+  /** Spark jobs triggered while running `body`, counted by job-group tag
+    * so concurrent suite activity on the shared SparkContext can never
+    * inflate the count. `body` runs synchronously, so every job it
+    * triggers has STARTED before it returns; the settle loop only waits
+    * out the async listener-bus delivery of those already-started events.
+    */
+  private def countJobs(body: => Unit): Int = {
+    val group = s"scd2spec-${java.util.UUID.randomUUID()}"
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
+        val g = Option(jobStart.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) { counter.incrementAndGet(); () }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "Scd2Spec.countJobs")
+    try {
+      body
+      var last = -1
+      var settled = 0
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (settled < 3 && System.nanoTime() < deadline) {
+        val cur = counter.get()
+        if (cur == last) settled += 1 else { settled = 0; last = cur }
+        Thread.sleep(50)
+      }
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    counter.get()
+  }
+
+  test("a file-pruned upsert on a pk-sorted table stays within its Spark " +
+       "job budget (one key collect, one staging read of the touched file)") {
+    def rows(r: Range) = df(baseSchema,
+      r.map(i => Row(i, s"a$i", true, ts("2019-01-01 00:00:00"), null))).coalesce(1)
+    val t = ManagedTable.create(rows(1 to 100), tmpDir("scd2jobs"))
+    t.append(rows(101 to 200))
+    t.append(rows(201 to 300))
+    def edgeFiles = (t.toDFWhere("pkey <= 100").inputFiles ++
+      t.toDFWhere("pkey > 200 AND pkey <= 300").inputFiles).toSet
+    val edge = edgeFiles
+    assert(edge.size == 2, s"setup: one file per pk range, got $edge")
+    val updates = df(updSchema, Seq(
+      Row(150, "CHANGED", ts("2020-01-01 00:00:00")), // closes a version
+      Row(160, "a160", ts("2020-01-01 00:00:00")),    // unchanged: no-op
+      Row(1000, "NEW", ts("2020-01-01 00:00:00"))))   // new key, no file
+    val jobs = countJobs { Scd2.upsert(t, updates, "pkey", Seq("attr")) }
+    assert(edge.subsetOf(t.toDF.inputFiles.toSet),
+      "the files the batch's keys cannot touch are kept")
+    val cur = t.toDF.filter("is_current").collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(cur.size == 301 && cur(150) == "CHANGED" && cur(160) == "a160" &&
+      cur(1000) == "NEW")
+    assert(t.toDF.count() == 302)
+    // 6 jobs: the key collect (distinct: 2) and the write (one outer join
+    // over the touched file, staged against that file only: 4); the
+    // three-join plan over a full-snapshot staging ran 11. Budget 1.25 x 6.
+    info(s"pruned SCD2 upsert ran $jobs Spark jobs")
+    assert(jobs <= 7, s"pruned SCD2 upsert ran $jobs Spark jobs (budget 7)")
   }
 }

@@ -1111,4 +1111,16 @@ class IcebergSpec extends SparkSpec {
     assert(e.getMessage.contains("ambiguous"), e.getMessage)
   }
 
+  test("an empty schemas[] with no inline schema refuses with its own " +
+       "message (not the multi-entry ambiguity one)") {
+    refusal("emptyschemas", "empty schemas[]") { meta =>
+      val p = meta.resolve("v1.metadata.json")
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val root = mapper.readTree(Files.readString(p))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      root.remove("current-schema-id"); root.remove("schema")
+      root.putArray("schemas")
+      Files.writeString(p, mapper.writeValueAsString(root))
+    }
+  }
 }

@@ -239,4 +239,89 @@ class FileStatsSpec extends SparkSpec {
       }
     }
   }
+
+  /** The linear (file × key) scan `FileStats.overlapping` used before its
+    * sorted-keys binary search, kept as the reference: every key encoded
+    * into the column's domain, every file's bounds compared with every
+    * key. An un-encodable key disables pruning; a file without bounds is
+    * kept.
+    */
+  private def overlappingReference(files: Seq[FileStat], schema: StructType,
+                                   colName: String, values: Seq[Any]): Seq[FileStat] = {
+    val dt = schema(colName).dataType
+    val encoded: Seq[Option[String]] = values.map {
+      case s: String if dt == StringType => Some(s)
+      case d: java.sql.Date if dt == DateType => Some(d.toLocalDate.toEpochDay.toString)
+      case d: java.time.LocalDate if dt == DateType => Some(d.toEpochDay.toString)
+      case n: Number if dt != StringType => Some(n.longValue.toString)
+      case _ => None
+    }
+    def cmp(a: String, b: String): Int =
+      if (dt == StringType)
+        org.apache.spark.unsafe.types.UTF8String.fromString(a)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+      else java.lang.Long.compare(a.toLong, b.toLong)
+    if (encoded.exists(_.isEmpty)) files
+    else files.filter { f =>
+      (for { lo <- f.min.get(colName); hi <- f.max.get(colName) }
+        yield encoded.flatten.exists(v => cmp(lo, v) <= 0 && cmp(hi, v) >= 0))
+        .getOrElse(true)
+    }
+  }
+
+  test("overlapping (sorted keys, binary search) equals the linear scan over " +
+       "random bounds: long, string and date columns, boundless files, " +
+       "un-encodable keys") {
+    val sch = StructType(Seq(
+      StructField("l", LongType), StructField("s", StringType),
+      StructField("d", DateType)))
+    val rnd = new scala.util.Random(20261017L)
+    // multi-byte and supplementary characters: UTF-8 byte order differs
+    // from String.compareTo's UTF-16 order there
+    val alphabet = Seq("a", "b", "z", "A", "\u00e9", "\uFB00", "\uD83D\uDE00")
+    def str(): String = Seq.fill(rnd.nextInt(3))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    def dom(c: String): (String, String) = c match {
+      case "s" =>
+        val a = str(); val b = str()
+        if (org.apache.spark.unsafe.types.UTF8String.fromString(a)
+              .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) <= 0) (a, b)
+        else (b, a)
+      case _ =>
+        val a = rnd.nextInt(61) - 30L; val b = a + rnd.nextInt(12)
+        (a.toString, b.toString)
+    }
+    def key(c: String): Any = c match {
+      case "l" => if (rnd.nextBoolean()) Long.box(rnd.nextInt(81) - 40L)
+                  else Int.box(rnd.nextInt(81) - 40)
+      case "s" => str()
+      case "d" =>
+        val day = rnd.nextInt(81) - 40L
+        if (rnd.nextBoolean()) java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(day))
+        else java.time.LocalDate.ofEpochDay(day)
+    }
+    def unencodable(c: String): Any = c match {
+      case "s" => Int.box(7)
+      case _ => "not-a-number"
+    }
+    var pruning = 0
+    for (round <- 0 until 600) {
+      val c = Seq("l", "s", "d")(round % 3)
+      val files = (0 until rnd.nextInt(25)).map { i =>
+        rnd.nextInt(10) match {
+          case 0 => FileStat(s"f$i", 1, 1, Map.empty, Map.empty)
+          case 1 => FileStat(s"f$i", 1, 1, Map(c -> dom(c)._1), Map.empty)
+          case _ =>
+            val (lo, hi) = dom(c)
+            FileStat(s"f$i", 1, 1, Map(c -> lo), Map(c -> hi))
+        }
+      }
+      val keys = Seq.fill(rnd.nextInt(30))(key(c)) ++
+        (if (rnd.nextInt(10) == 0) Seq(unencodable(c)) else Nil)
+      val got = FileStats.overlapping(files, sch, c, keys).map(_.path)
+      val want = overlappingReference(files, sch, c, keys).map(_.path)
+      assert(got == want, s"round $round on $c: keys $keys")
+      if (want.size < files.size) pruning += 1
+    }
+    assert(pruning > 100, s"only $pruning rounds pruned anything")
+  }
 }

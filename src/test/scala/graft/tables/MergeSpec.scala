@@ -4,6 +4,11 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 
+/** Calls of the nondeterministic UDF below (one JVM in local mode). */
+object MergeSpecUdfCalls {
+  val n = new java.util.concurrent.atomic.AtomicLong()
+}
+
 class MergeSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -241,5 +246,151 @@ class MergeSpec extends SparkSpec {
          |""".stripMargin).collect()
     assertDfEquality(ManagedTable.forPath(spark, loc).toDF, df(schema,
       Seq(Row(1, "STALE"), Row(2, "B2"), Row(5, "E"))))
+  }
+
+  // ---- the file-pruned path --------------------------------------------
+
+  /** A stats-bearing table of three files, pkeys 1-10 / 11-20 / 21-30 (one
+    * single-partition commit each), so a merge whose keys lie in 11-20
+    * rewrites only the middle file.
+    */
+  private def threeFiles(prefix: String): ManagedTable = {
+    def rows(r: Range) = df(schema, r.map(i => Row(i, s"v$i"))).coalesce(1)
+    val t = ManagedTable.create(rows(1 to 10), tmpDir(prefix))
+    t.append(rows(11 to 20))
+    t.append(rows(21 to 30))
+    assert(t.fileStats.size == 3, "setup: one file per commit")
+    t
+  }
+
+  private def edgeFiles(t: ManagedTable): Set[String] =
+    t.fileStats.filter(f => f.min("pkey").toInt != 11).map(_.path).toSet
+
+  private def assertPruned(b: Merge.Builder, t: ManagedTable): Unit =
+    b.filePrunePlan(t.latestEntry) match {
+      case Merge.FilePrune.Pruned(touched, _) =>
+        assert(touched.map(_.min("pkey").toInt) == Seq(11),
+          "only the 11-20 file may be touched")
+      case other => fail(s"expected the file-pruned path, got $other")
+    }
+
+  private def contents(t: ManagedTable): Map[Int, Seq[String]] =
+    t.toDF.collect().toSeq.groupBy(_.getInt(0))
+      .map { case (k, rs) => k -> rs.map(_.getString(1)).sorted }
+
+  private def causeMessages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ causeMessages(t.getCause)
+
+  test("file-pruned path: a target row matched by two source rows raises " +
+       "and commits nothing") {
+    val t = threeFiles("prunedmulti")
+    val v0 = t.latestVersion
+    val b = Merge.into(t.toDF, "base")
+      .using(df(schema, Seq(Row(15, "x"), Row(15, "y"))), "src",
+        "base.pkey = src.pkey")
+      .whenMatchedUpdate(Map("attr" -> "src.attr"))
+    assertPruned(b, t)
+    val e = intercept[Exception](b.execute(t))
+    assert(causeMessages(e).exists(_.contains("matched by multiple source rows")),
+      s"unexpected error: $e")
+    assert(t.latestVersion == v0)
+  }
+
+  test("file-pruned path: an insert-only merge passes a target row matched " +
+       "by two source rows through exactly once") {
+    val t = threeFiles("prunedinsonly")
+    val kept = edgeFiles(t)
+    val b = Merge.into(t.toDF, "base")
+      .using(df(schema, Seq(Row(15, "x"), Row(15, "y"), Row(40, "new"))), "src",
+        "base.pkey = src.pkey")
+      .whenNotMatchedInsertAll()
+    assertPruned(b, t)
+    b.execute(t)
+    val expected = (1 to 30).map(i => i -> Seq(s"v$i")).toMap + (40 -> Seq("new"))
+    assert(contents(t) == expected)
+    assert(kept.subsetOf(t.fileStats.map(_.path).toSet))
+  }
+
+  test("file-pruned path: matched delete + matched update + insert in one " +
+       "merge equal the hand-computed result") {
+    val t = threeFiles("prunedmixed")
+    val kept = edgeFiles(t)
+    val b = Merge.into(t.toDF, "base")
+      .using(df(schema, Seq(Row(12, "del"), Row(15, "u15"), Row(18, "u18"),
+        Row(35, "new35"))), "src", "base.pkey = src.pkey")
+      .whenMatchedDelete("src.attr = 'del'")
+      .whenMatchedUpdate("src.pkey <> 18", Map("attr" -> "src.attr"))
+      .whenNotMatchedInsertAll()
+    assertPruned(b, t)
+    b.execute(t)
+    // 12 deleted, 15 updated, 18 matched by no clause (passes through),
+    // 35 inserted, every other row untouched
+    val expected = ((1 to 30).filter(_ != 12).map(i => i -> Seq(s"v$i")).toMap
+      + (15 -> Seq("u15")) + (35 -> Seq("new35")))
+    assert(contents(t) == expected)
+    assert(kept.subsetOf(t.fileStats.map(_.path).toSet))
+  }
+
+  test("matched update + bySource delete + insert in one merge on a " +
+       "multi-file table equal the hand-computed result") {
+    val t = threeFiles("mixedbysource")
+    Merge.into(t.toDF, "base")
+      .using(df(schema, Seq(Row(15, "u15"), Row(27, "u27"), Row(35, "new35"))),
+        "src", "base.pkey = src.pkey")
+      .whenMatchedUpdate(Map("attr" -> "src.attr"))
+      .whenNotMatchedInsertAll()
+      .whenNotMatchedBySourceDelete("base.pkey > 25")
+      .execute(t)
+    // 26, 28-30 deleted (unmatched, > 25); 27 matched, so updated not
+    // deleted; 15 updated; 35 inserted
+    val expected = ((1 to 25).map(i => i -> Seq(s"v$i")).toMap
+      + (15 -> Seq("u15")) + (27 -> Seq("u27")) + (35 -> Seq("new35")))
+    assert(contents(t) == expected)
+  }
+
+  test("file-pruned path: a source holding only NULL keys touches no file " +
+       "and still inserts") {
+    val t = threeFiles("prunednull")
+    val before = t.fileStats.map(_.path).toSet
+    val b = Merge.into(t.toDF, "base")
+      .using(df(schema, Seq(Row(null, "n1"), Row(null, "n2"))), "src",
+        "base.pkey = src.pkey")
+      .whenMatchedUpdate(Map("attr" -> "src.attr"))
+      .whenNotMatchedInsertAll()
+    b.filePrunePlan(t.latestEntry) match {
+      case Merge.FilePrune.Pruned(touched, _) => assert(touched.isEmpty)
+      case other => fail(s"expected Pruned(Nil), got $other")
+    }
+    b.execute(t)
+    assert(before.subsetOf(t.fileStats.map(_.path).toSet),
+      "no file can hold a match for a NULL key")
+    assert(t.toDF.count() == 32)
+    assert(t.toDF.filter("pkey IS NULL").collect().map(_.getString(1)).toSet ==
+      Set("n1", "n2"))
+  }
+
+  test("a nondeterministic source is evaluated once per row per execute") {
+    import org.apache.spark.sql.functions.{col, lit, udf}
+    val t = threeFiles("nondet")
+    val tagged = udf { (i: Long) =>
+      MergeSpecUdfCalls.n.incrementAndGet()
+      i.toInt
+    }.asNondeterministic()
+    val src = spark.range(14, 17, 1, 2)
+      .select(tagged(col("id")).as("pkey"), lit("nd").as("attr"))
+    val b = Merge.into(t.toDF, "base")
+      .using(src, "src", "base.pkey = src.pkey")
+      .whenMatchedUpdate(Map("attr" -> "src.attr"))
+      .whenNotMatchedInsertAll()
+    MergeSpecUdfCalls.n.set(0)
+    b.execute(t)
+    // the key collect and the write share ONE evaluation of the source
+    assert(MergeSpecUdfCalls.n.get() == 3,
+      s"source rows evaluated ${MergeSpecUdfCalls.n.get()} times, expected 3")
+    assert(src.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the materialized source is released after the merge")
+    val expected = (1 to 30).map(i =>
+      i -> Seq(if (i >= 14 && i <= 16) "nd" else s"v$i")).toMap
+    assert(contents(t) == expected)
   }
 }
