@@ -32,23 +32,21 @@ import org.apache.spark.storage.StorageLevel
   * outer join when there is no insert clause). Target rows carry a row id
   * and source rows a source row id, and the two tags classify each joined
   * row as matched, target-only or source-only; one clause-index column
-  * then records the first applicable clause of its class. One window
-  * counts each target row's matches: more than one raises the
-  * multiple-match error when a whenMatched clause exists, and an
-  * insert-only merge keeps the first, so a matched target row passes
-  * through once. When the condition is a conjunction of equi-bindings the
-  * window counts source rows per key, inside the shuffle the join already
-  * does on the source; otherwise it runs over the joined rows, partitioned
-  * by the target row id (a source-only row by its own id, so those never
-  * pile into one partition). One filter drops deleted and unclaimed rows,
-  * and one projection writes every column through the clause that
-  * applies. The target is scanned once and shuffled once on the merge
-  * key; the CDC sidecar ([[Builder.changesFrame]]) is derived from the
-  * same classified frame. This is Delta's MergeIntoCommand
-  * rewrite: one outer join over the touched files, which
-  * [[Builder.execute]] narrows first by partition values or by the
-  * merge-key bounds of each file (one driver-side collect of the source's
-  * keys).
+  * then records the first applicable clause of its class. One window over
+  * the joined rows, partitioned by the target row id (a source-only row
+  * by its own id, so those never pile into one partition), counts each
+  * target row's matches: more than one raises the multiple-match error
+  * when a whenMatched clause exists, and an insert-only merge keeps the
+  * first, so a matched target row passes through once. One filter drops
+  * deleted and unclaimed rows, and one projection writes every column
+  * through the clause that applies. The target is scanned once; the CDC
+  * sidecar ([[Builder.changesFrame]]) is derived from the same classified
+  * frame. A commit range-partitions the rows by the merge key before
+  * writing, so rewritten files keep disjoint key ranges. This is Delta's
+  * MergeIntoCommand rewrite: one outer join over the touched files,
+  * which [[Builder.execute]] narrows first by partition values or by the
+  * merge-key bounds of each file (one driver-side collect of the
+  * source's keys).
   */
 object Merge {
 
@@ -321,15 +319,21 @@ object Merge {
           return
         }
       }
+      withSourceOnce(_.executeAt(table, table.latestEntry))
+    }
+
+    /** Runs `body` on this merge with a nondeterministic source persisted
+      * for its duration (see [[execute]]); a deterministic or
+      * caller-cached source is used as is.
+      */
+    private[tables] def withSourceOnce(body: Builder => Unit): Unit =
       if (source.queryExecution.analyzed.deterministic ||
-          source.storageLevel != StorageLevel.NONE)
-        executeAt(table, table.latestEntry)
+          source.storageLevel != StorageLevel.NONE) body(this)
       else {
         val once = source.persist(StorageLevel.MEMORY_AND_DISK)
-        try copy(source = once).executeAt(table, table.latestEntry)
+        try body(copy(source = once))
         finally { once.unpersist(); () }
       }
-    }
 
     /** [[execute]] against the snapshot `base`, which is both the plan's
       * read and the commit base: a commit landing mid-merge can never make
@@ -395,7 +399,7 @@ object Merge {
             values.map(m => parts.map(p => col(p) <=> lit(m(p))).reduce(_ && _))
               .reduce(_ || _)
         val pruned = copy(target = target.filter(pred))
-        table.overwritePartitions(pruned.run(), values, operation = "MERGE",
+        table.overwritePartitions(pruned.rewrite(base), values, operation = "MERGE",
           baseVersion = baseVersion, cdc = pruned.cdcFor(table, base),
           txn = txn)
       } else if (!executeFilePruned(table, base)) overwriteAt(table, base)
@@ -404,7 +408,7 @@ object Merge {
     /** The full-snapshot rewrite every unprunable merge commits. */
     private[tables] def overwriteAt(table: ManagedTable,
                                     base: ManagedTable.LogEntry): Unit =
-      table.overwriteFrom(base.version, run(), "MERGE",
+      table.overwriteFrom(base.version, rewrite(base), "MERGE",
         cdc = cdcFor(table, base), txn = txn)
 
     /** File-granular MERGE (Delta's find-touched-files): files whose
@@ -448,7 +452,7 @@ object Merge {
       // read it — i.e. it survives the same key-bounds filters that
       // selected the touched files. A blind append with provably-disjoint
       // key bounds commutes (both commits land).
-      table.replaceFiles(touched.map(_.path).toSet, run(), operation = "MERGE",
+      table.replaceFiles(touched.map(_.path).toSet, rewrite(base), operation = "MERGE",
         base = base,
         addedMayMatch = added =>
           keyFilters.foldLeft(added)((fs, f) => f(fs)).nonEmpty,
@@ -646,14 +650,8 @@ object Merge {
       * (Delta passes such rows through once and skips the multi-match
       * error when no whenMatched clause exists).
       *
-      * When the merge condition is a conjunction of equi-bindings
-      * ([[sourceMatchKeys]]) the window runs on the SOURCE, partitioned by
-      * its key values — the partitioning the join shuffles the source by
-      * anyway, so it costs no extra shuffle — and counts the source rows
-      * sharing a key, which is the match count of every target row a
-      * source row matches. Otherwise it runs over the joined rows, one
-      * partition per target row (a source-only row alone, so those never
-      * pile into one partition).
+      * The window runs over the joined rows, one partition per target row
+      * (a source-only row alone, so those never pile into one partition).
       */
     private def classified(): (DataFrame, Column) = {
       val targetCols = target.columns.toSeq
@@ -671,17 +669,9 @@ object Merge {
       notMatched.find(c => !c.isInstanceOf[Insert] && !c.isInstanceOf[InsertAll])
         .foreach(c => throw new IllegalArgumentException(
           s"whenNotMatched only supports insert clauses, got $c"))
-      // count the matches, or rank them for the insert-only pass-through
-      def matchWindow(w: org.apache.spark.sql.expressions.WindowSpec,
-                      order: Seq[Column]): Column =
-        if (matched.nonEmpty) count(lit(1)).over(w)
-        else row_number().over(w.orderBy(order: _*))
       val t = target.select(col("*"), monotonically_increasing_id().as(RID))
         .alias(targetAlias)
-      val sa = source.alias(sourceAlias)
-      val keys = sourceMatchKeys(sa)
-      val s = sa.select(Seq(col("*"), monotonically_increasing_id().as(SID)) ++
-          keys.map(ks => matchWindow(Window.partitionBy(ks: _*), ks).as(MatchN)): _*)
+      val s = source.select(col("*"), monotonically_increasing_id().as(SID))
         .alias(sourceAlias)
       val isMatched = col(RID).isNotNull && col(SID).isNotNull
       val cls = when(isMatched, clauseIdx(matched, 0))
@@ -691,9 +681,11 @@ object Merge {
         if (notMatched.isEmpty) "left_outer" else "full_outer")
       // RIDs are >= 0, so a source-only row's key -1 - SID never collides
       val perTarget = Window.partitionBy(coalesce(col(RID), lit(-1L) - col(SID)))
-      val c = joined.select(Seq(col("*"), cls.as(Cls)) ++
-        (if (keys.isEmpty) Seq(matchWindow(perTarget, Seq(col(SID))).as(MatchN))
-         else Nil): _*)
+      // count the matches, or rank them for the insert-only pass-through
+      val matchN =
+        if (matched.nonEmpty) count(lit(1)).over(perTarget)
+        else row_number().over(perTarget.orderBy(col(SID)))
+      val c = joined.select(col("*"), cls.as(Cls), matchN.as(MatchN))
       val matchOk =
         if (matched.nonEmpty)
           assert_true(!isMatched || col(MatchN) <= 1,
@@ -702,31 +694,6 @@ object Merge {
               "per target row")).isNull
         else !isMatched || col(MatchN) === 1
       (c, matchOk && (col(RID).isNotNull || col(Cls).isNotNull))
-    }
-
-    /** The source-side key expressions of the merge condition when EVERY
-      * conjunct equi-binds a target column to a deterministic source
-      * expression of the same type. A target row then matches exactly the
-      * source rows whose key values equal its own, so the source rows
-      * sharing a key count the matches of every target row they match.
-      * None for any other condition (and under a type coercion, where the
-      * join could equate values the window would keep apart).
-      */
-    private def sourceMatchKeys(sa: DataFrame): Option[Seq[Column]] = {
-      val bindings = equiBindings
-      if (bindings.isEmpty || bindings.length !=
-            conjuncts(GraftColumnBridge.parsedExpression(mergeCondition)).length) None
-      else {
-        val ks = bindings.map { case (_, e, _) => GraftColumnBridge.column(e) }
-        val probe = sa.select(ks: _*)
-        val sameTypes = bindings.zip(probe.schema.fields).forall {
-          case ((name, _, _), f) =>
-            target.schema.fields.find(_.name.equalsIgnoreCase(name))
-              .exists(_.dataType == f.dataType)
-        }
-        if (sameTypes && probe.queryExecution.analyzed.deterministic) Some(ks)
-        else None
-      }
     }
 
     // the target row as read, aligned to the target schema
@@ -767,6 +734,26 @@ object Merge {
     private def run(): DataFrame = {
       val (c, ok) = classified()
       c.filter(ok && !clauseIn(deleteIdxs)).select(postImage: _*)
+    }
+
+    /** [[run]]'s rows as a commit writes them: range-partitioned by the
+      * table's partition columns and the first equi-bound merge-key
+      * column, so each written file holds one contiguous key range. The
+      * outer join leaves its rows hash-partitioned by the key; written as
+      * they are, every file would span the whole rewritten key range and
+      * skip nothing for later merges and point reads. A table with a
+      * `graft.write.sortBy` property is range-partitioned by the write
+      * itself, and a merge without an equi-binding keeps the join's layout.
+      */
+    private def rewrite(base: ManagedTable.LogEntry): DataFrame = {
+      val key = equiBindings.iterator
+        .flatMap { case (n, _, _) => target.columns.find(_.equalsIgnoreCase(n)) }
+        .nextOption()
+      val sortedWrite =
+        base.properties.get(ManagedTable.writeSortPropKey).exists(_.trim.nonEmpty)
+      val out = run()
+      key.filterNot(_ => sortedWrite).fold(out)(k =>
+        out.repartitionByRange((base.partitionColumns :+ k).distinct.map(col): _*))
     }
 
     /** The labeled net change rows this merge produces (Delta CDF's MERGE
@@ -821,16 +808,24 @@ object Merge {
     * read, the merge's target read and the commit base are the same log
     * entry. The caller guarantees that the source's use of the target
     * depends only on target rows whose key is among `keys` (the rows the
-    * touched files hold), and that the merge carries no transaction
-    * marker and no schema evolution. Partitioned tables, tables without
-    * usable stats and nondeterministic keys take the general path.
+    * touched files hold). The staged merge may carry no transaction
+    * marker, schema evolution or notMatchedBySource clause: those need
+    * [[Builder.execute]]'s own checks and full-rewrite rule. Partitioned
+    * tables, tables without usable stats and nondeterministic keys take
+    * the general path over the same snapshot.
     */
   private[graft] def executeStaged(table: ManagedTable, keyColumn: String,
                                    keys: DataFrame)(stage: DataFrame => Builder): Unit = {
     val base = table.latestEntry
-    def full = stage(table.snapshotDF(base))
+    def checked(b: Builder): Builder = {
+      require(b.txn.isEmpty && !b.evolveSchema && b.notMatchedBySource.isEmpty,
+        "executeStaged takes no transaction marker, schema evolution or " +
+          "notMatchedBySource clause; use Builder.execute")
+      b
+    }
+    def full = checked(stage(table.snapshotDF(base)))
     if (!keys.queryExecution.analyzed.deterministic)
-      full.execute(table) // materializes the source once
+      full.withSourceOnce(_.executeAt(table, base))
     else if (base.partitionColumns.nonEmpty || base.files.size < 2 ||
              !skippableIn(base, keyColumn))
       full.executeAt(table, base)
@@ -838,7 +833,7 @@ object Merge {
       case None => () // no source rows: the merge is a no-op
       case Some(k) => prunePlan(base, Seq(keyColumn -> false), Seq(k)) match {
         case FilePrune.Pruned(touched, keyFilters) =>
-          stage(table.scanFilesDF(touched, base))
+          checked(stage(table.scanFilesDF(touched, base)))
             .commitPruned(table, base, touched, keyFilters)
         case _ => full.overwriteAt(table, base)
       }

@@ -393,4 +393,91 @@ class MergeSpec extends SparkSpec {
       i -> Seq(if (i >= 14 && i <= 16) "nd" else s"v$i")).toMap
     assert(contents(t) == expected)
   }
+
+  // ---- a condition beyond pure equi-bindings ---------------------------
+
+  test("file-pruned path, non-equi conjunct: a target row matched by two " +
+       "source rows raises and commits nothing") {
+    val t = threeFiles("prunedmultine")
+    val v0 = t.latestVersion
+    val b = Merge.into(t.toDF, "base")
+      .using(df(schema, Seq(Row(15, "x"), Row(15, "y"))), "src",
+        "base.pkey = src.pkey AND src.attr <> base.attr")
+      .whenMatchedUpdate(Map("attr" -> "src.attr"))
+    assertPruned(b, t)
+    val e = intercept[Exception](b.execute(t))
+    assert(causeMessages(e).exists(_.contains("matched by multiple source rows")),
+      s"unexpected error: $e")
+    assert(t.latestVersion == v0)
+  }
+
+  test("file-pruned path, non-equi conjunct: an insert-only merge passes a " +
+       "target row matched by two source rows through exactly once") {
+    val t = threeFiles("prunedinsonlyne")
+    val kept = edgeFiles(t)
+    // (15, x) and (15, y) both match base row 15; (16, v16) matches no
+    // row (equal attr), so it is inserted beside the base row 16
+    val b = Merge.into(t.toDF, "base")
+      .using(df(schema, Seq(Row(15, "x"), Row(15, "y"), Row(16, "v16"),
+        Row(40, "new"))), "src", "base.pkey = src.pkey AND src.attr <> base.attr")
+      .whenNotMatchedInsertAll()
+    assertPruned(b, t)
+    b.execute(t)
+    val expected = (1 to 30).map(i => i -> Seq(s"v$i")).toMap +
+      (16 -> Seq("v16", "v16")) + (40 -> Seq("new"))
+    assert(contents(t) == expected)
+    assert(kept.subsetOf(t.fileStats.map(_.path).toSet))
+  }
+
+  // ---- the written layout ----------------------------------------------
+
+  test("a full-rewrite merge of a pk-sorted table writes files whose pk " +
+       "bounds stay disjoint") {
+    def rows(r: Range) = df(schema, r.map(i => Row(i, s"v$i"))).coalesce(1)
+    val t = ManagedTable.create(rows(1 to 25), tmpDir("rewritelayout"))
+    Seq(26 to 50, 51 to 75, 76 to 100).foreach(r => t.append(rows(r)))
+    // one key in every file: pruning removes nothing, the merge rewrites
+    // the whole snapshot through the outer join
+    val b = Merge.into(t.toDF, "base")
+      .using(df(schema, Seq(10, 30, 60, 90, 101, 102).map(i => Row(i, s"u$i"))),
+        "src", "base.pkey = src.pkey")
+      .whenMatchedUpdateAll()
+      .whenNotMatchedInsertAll()
+    assert(b.filePrunePlan(t.latestEntry) == Merge.FilePrune.Fallback)
+    // keep every shuffle partition its own file, as at a scale where
+    // each partition fills the advisory size
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try b.execute(t)
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    val bounds = t.fileStats
+      .map(f => (f.min("pkey").toInt, f.max("pkey").toInt)).sortBy(_._1)
+    assert(bounds.size > 1, s"expected several files, got $bounds")
+    assert(bounds.zip(bounds.tail).forall { case ((_, hi), (lo, _)) => hi < lo },
+      s"rewritten files overlap on pkey: $bounds")
+    val expected = (1 to 100).map(i =>
+      i -> Seq(if (Set(10, 30, 60, 90)(i)) s"u$i" else s"v$i")).toMap +
+      (101 -> Seq("u101")) + (102 -> Seq("u102"))
+    assert(contents(t) == expected)
+  }
+
+  test("executeStaged refuses a transaction marker, schema evolution or a " +
+       "notMatchedBySource clause") {
+    val t = threeFiles("stagedguard")
+    val v0 = t.latestVersion
+    val src = df(schema, Seq(Row(15, "x")))
+    val unsupported = Seq[Merge.Builder => Merge.Builder](
+      _.withTxn("app", 1), _.withSchemaEvolution(), _.whenNotMatchedBySourceDelete())
+    unsupported.foreach { f =>
+      intercept[IllegalArgumentException](
+        Merge.executeStaged(t, "pkey", src.select("pkey"))(base =>
+          f(Merge.into(base, "base").using(src, "src", "base.pkey = src.pkey")
+            .whenMatchedUpdateAll())))
+    }
+    assert(t.latestVersion == v0)
+  }
 }
