@@ -87,7 +87,7 @@ object SparkEntry {
 
   /** State-store provider for the stateful streaming queries — measured,
     * and the answer at THIS scale is: keep the default HDFS-backed
-    * provider. tools/ProfileStateStore runs the declared queries in an
+    * provider. The declared queries were run in an
     * INTERLEAVED same-JVM A/B (HDFS → RocksDB+changelog → repeat, calib
     * probes bracketing each pair, sf0.1, 4 state partitions). At calm
     * ambient (calib 0.2–0.7 vs ref 0.5):
@@ -2564,7 +2564,7 @@ object SparkEntry {
         .select(col("click_id"), col("view_id"), col("user_id"),
           (col("click_ts").cast("long") - col("view_ts").cast("long"))
             .as("gap_sec"))
-      // State sizing, measured (tools/ProfileIntervalJoin, sf0.1): a
+      // State sizing, measured (per-phase profile, sf0.1): a
       // stream-stream join commits FOUR state stores per shuffle
       // partition per micro-batch (left/right × keyToNumValues/
       // keyWithIndexToValue); at the session's 32 partitions that is 128
@@ -3005,7 +3005,7 @@ object SparkEntry {
     // Jaccard LSH structurally misses (a page quoted inside a 10× larger
     // page has containment 1.0, Jaccard 0.1). Candidates via rare-shingle
     // inverted index (df-first cut, no boilerplate blowup); the oracle is
-    // the exact all-pairs formulation (recall 1.0: RecallProbe — a missed
+    // the exact all-pairs formulation (recall 1.0, measured — a missed
     // pair needs EVERY shared shingle above the df cut)
     "neardup_containment" -> ((s, dir) =>
       text.MinHashDedup.containmentPairs(
@@ -7011,7 +7011,7 @@ object SparkEntry {
         |      / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) >= 0.7""".stripMargin,
 
     // exact all-pairs containment over the same word 3-shingles; the
-    // engine's rare-shingle candidate route has recall 1.0 (RecallProbe)
+    // engine's rare-shingle candidate route has recall 1.0 (measured)
     "neardup_containment" ->
       s"""WITH toks AS (SELECT doc_id,
          |  list_filter(string_split_regex(lower(text), '[^\\p{L}]+'),

@@ -332,8 +332,8 @@ object ExprKernels {
     * boundary-rejected occurrences block nothing — exactly the greedy
     * left-to-right rule of [[blocklistHitsScan]], which stays the
     * better plan for SHORT lists (JIT-intrinsified `String.indexOf`
-    * beats the per-char automaton walk up to ~64 phrases — measured in
-    * `tools/ProfileBlocklist`: flat ~26 ms/5k docs for the automaton at
+    * beats the per-char automaton walk up to ~64 phrases — measured:
+    * flat ~26 ms/5k docs for the automaton at
     * any P vs 4 ms at P=2 and 96 ms at P=314 for the scan). The
     * expression picks the path per plan by list size. Inputs arrive
     * pre-lowercased from the expression's reference objects.
@@ -1424,7 +1424,7 @@ object ExprKernels {
     val perCol = (1 << bits) - 1
     if (nCols == 2)
       // the dominant OPTIMIZE shape gets the allocation-free unrolled
-      // path (~2x the generic transpose's row rate — ProfileHilbert)
+      // path (~2x the generic transpose's row rate, measured)
       return hilbertIndex2(bucketOf(vals, bounds, 0, perCol),
         bucketOf(vals, bounds, 1, perCol), bits)
     val x = new Array[Int](nCols)

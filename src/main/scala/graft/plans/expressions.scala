@@ -554,7 +554,7 @@ case class BlocklistHits(child: Expression, words: Seq[String])
   // one goto/fail automaton for ALL phrase entries — built lazily per
   // plan instance (driver), shipped as a reference object; matching is
   // one pass per row however long the blocklist is. Below the measured
-  // crossover (~64 entries; tools/ProfileBlocklist) the intrinsified
+  // crossover (~64 entries, measured) the intrinsified
   // per-phrase indexOf scan is faster, so short lists keep it
   private def useAutomaton: Boolean =
     phraseArr.length >= BlocklistHits.AcThreshold
@@ -592,8 +592,8 @@ case class BlocklistHits(child: Expression, words: Seq[String])
 
 object BlocklistHits {
   /** Phrase count at which the Aho-Corasick pass overtakes the
-    * per-phrase `indexOf` scan (measured in `tools/ProfileBlocklist`:
-    * the automaton is flat in P, the scan linear; they cross ~64).
+    * per-phrase `indexOf` scan (measured: the automaton is flat in P,
+    * the scan linear; they cross ~64).
     */
   val AcThreshold: Int = 64
 }

@@ -200,7 +200,7 @@ object StreamingDedup {
     // PageRank/mkn small-regime idiom): the dedup plan is a handful of
     // small joins and exchanges per batch, and at session width every
     // one of them shuffles a toy-sized frame across the full partition count
-    // — measured (tools/StreamProfile, sf0.1 probe): the same two
+    // — measured (sf0.1 probe): the same two
     // batches cost 11.6 s at width 32 and 6.5 s at width 4, all of it
     // task-scheduling and tiny-exchange overhead. The width derives
     // from the index's OWN scale knob: `parts` is pinned at creation

@@ -9,18 +9,27 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 /** Raised when a commit loses the put-if-absent race for its version file
-  * AND the conflict cannot be resolved by rebasing. Delta-style
-  * write-serializable rules apply per commit kind:
+  * AND the conflict cannot be resolved by retrying. Every commit after
+  * the first goes through `ManagedTable.transact`, which applies one of
+  * three Delta-style write-serializable policies to the commits that won:
   *
-  *  - blind appends always rebase and retry (appends commute);
-  *  - partition-scoped commits (overwritePartitions, partition-pruned
-  *    MERGE) rebase when every intervening commit touched DISJOINT
-  *    partitions, and raise otherwise;
-  *  - file-granular commits (file-pruned MERGE) rebase when no intervening
-  *    commit removed a file this merge rewrote and no intervening commit
-  *    added a file that may contain this merge's keys, and raise otherwise;
-  *  - full-snapshot rewrites (overwrite-backed MERGE/OPTIMIZE) read the
-  *    whole table, so ANY intervening commit raises.
+  *  - '''Commute''' (`append` and its staged form, `addColumns`): the
+  *    commit is recomputed against the new latest version and retried;
+  *    an append rewrites its data only when the schema or layout moved.
+  *  - '''FailIfMoved''' (`overwrite` and the full-rewrite MERGE,
+  *    `setProperties`, `unsetProperties`, `dropColumn`, `setNotNull`,
+  *    `dropNotNull`, `restore`, `fsck`, OPTIMIZE of a pre-stats table):
+  *    the commit read the snapshot as a whole, so ANY intervening commit
+  *    raises.
+  *  - '''Rebase''' (read-modify-write commits over part of the table):
+  *    the intervening commits are kept when none conflicts. Partition
+  *    form (`overwritePartitions`, the partition-pruned MERGE): no
+  *    intervening commit touched a replaced partition. File form
+  *    (`replaceFiles` — file-pruned MERGE, DELETE/UPDATE rewrites,
+  *    OPTIMIZE — and deletion-vector DELETE/UPDATE): no intervening
+  *    commit removed or re-vectored a file this commit rewrites, and none
+  *    added a file that may contain this commit's keys. A concurrent
+  *    schema or partitioning change always raises.
   */
 final class ConcurrentCommitException(msg: String) extends IllegalStateException(msg)
 
@@ -236,18 +245,11 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
           s"Cannot restore $location to v$version: it references a " +
             s"vacuumed deletion vector ($r)")
       }
-    val cur = latestEntry
-    // copy() from the latest entry MUST drop per-commit payloads: an
-    // inherited `cdc` would make changes() re-emit the previous commit's
-    // sidecar rows under this version, and inherited `metrics` would
-    // report the previous DML's counts as this commit's.
-    commit(cur.copy(version = cur.version + 1,
-      timestampMs = System.currentTimeMillis(),
-      operation = s"RESTORE v$version",
-      dirs = src.dirs, schema = src.schema,
-      partitionColumns = src.partitionColumns, files = src.files,
-      metrics = Map("numRestoredFiles" -> src.files.size.toString),
-      cdc = Nil))
+    transact(s"RESTORE v$version", FailIfMoved()) { _ =>
+      Some(Actions(src.dirs, src.files,
+        metrics = Map("numRestoredFiles" -> src.files.size.toString),
+        schema = Some(src.schema)))
+    }
   }
 
   /** Schemas carrying `parquet.field.id` metadata (Iceberg imports of
@@ -311,13 +313,19 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     // version 0 diffs against the empty table: all its files are "added"
     // (the CREATE commit is append-shaped — changes() makes the same call)
     if (v == 0) return (cur.files, Nil, cur.operation, cur.schema)
-    val prev = readEntry(v - 1)
+    val (added, removed) = fileDiff(cur, readEntry(v - 1))
+    (added, removed, cur.operation, cur.schema)
+  }
+
+  /** The files `e` added over its parent `p` and the files it removed,
+    * keyed by (path, deletion-vector id): a vector swap keeps the path
+    * but is logically a rewrite of the file, so it counts as both.
+    */
+  private def fileDiff(e: LogEntry, p: LogEntry): (Seq[FileStat], Seq[FileStat]) = {
     def key(f: FileStat) = (f.path, f.dv)
-    val prevKeys = prev.files.map(key).toSet
-    val curKeys = cur.files.map(key).toSet
-    (cur.files.filterNot(f => prevKeys(key(f))),
-      prev.files.filterNot(f => curKeys(key(f))),
-      cur.operation, cur.schema)
+    val pKeys = p.files.map(key).toSet
+    val eKeys = e.files.map(key).toSet
+    (e.files.filterNot(f => pKeys(key(f))), p.files.filterNot(f => eKeys(key(f))))
   }
 
   /** Read a commit's added files under that commit's schema (returned by
@@ -694,10 +702,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     * applies, `mack/__init__.py:677-687`).
     */
   private def enforced(df: DataFrame, props: Map[String, String]): DataFrame = {
-    val checks = props.collect {
-      case (k, v) if k.startsWith(ManagedTable.constraintPrefix) =>
-        k.stripPrefix(ManagedTable.constraintPrefix) -> v
-    }
+    val checks = constraintsOf(props)
     if (checks.isEmpty) df
     else {
       val rowJson = to_json(struct(df.columns.map(col).toIndexedSeq: _*))
@@ -732,22 +737,21 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     // (verified empirically). Re-select with the committed schema's
     // metadata (top-level) and cast to its types (restores nested
     // struct ids, which live in the DataType).
-    val idSchema = Option(tableSchema).filter(ManagedTable.hasFieldIds)
-    // save/restore around the write (not a permanent session flip): the
-    // flag only stamps fields that carry metadata, but a library call
-    // must not leave a global conf mutated behind it. Set on the
-    // FRAME's session, not the table's: the write executes with the
-    // frame's SQLConf, and a caller may hand over a frame built in a
-    // width-scoped child session (the streaming-dedup per-batch
-    // pipeline) — flipping the table session's flag there would
-    // silently skip the id stamping.
-    val wsp = df.sparkSession
-    val prevIdWrite = idSchema.map(_ =>
-      wsp.conf.getOption("spark.sql.parquet.fieldId.write.enabled"))
-    val df1 = idSchema match {
+    //
+    // The stamping flag is switched on (idempotently, never restored —
+    // the same rule as [[ensureFieldIdRead]]) on the FRAME's session, not
+    // the table's: the write executes with the frame's SQLConf, and a
+    // caller may hand over a frame built in a width-scoped child session
+    // (the streaming-dedup per-batch pipeline). Restoring it after the
+    // write would let one append unset it under a sibling append still
+    // writing on the same session; it only stamps fields that carry
+    // metadata, so leaving it on changes no id-less write. A writer
+    // option cannot carry it: Parquet's write preparation copies the
+    // session value over the job's Hadoop key.
+    val df1 = Option(tableSchema).filter(ManagedTable.hasFieldIds) match {
       case None => df
       case Some(ts) =>
-        wsp.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+        df.sparkSession.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
         df.select(df.columns.map { c =>
           ts.fields.find(_.name == c) match {
             case Some(f) => col(c).cast(f.dataType).as(c, f.metadata)
@@ -755,46 +759,39 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
           }
         }.toIndexedSeq: _*)
     }
-    try {
-      // sorted writes (the `graft.write.sortBy` table property — Delta's
-      // optimized-writes + sort practice): each write RANGE-partitions by
-      // the configured columns (partition columns lead, so hive dirs keep
-      // one writer each) and sorts within tasks, so every commit's files
-      // are bound-DISJOINT on the leading sort column and probes skip
-      // inside fresh appends without waiting for an OPTIMIZE rewrite. A
-      // per-task sort alone would only tighten row-group stats — file
-      // min/max needs the range shuffle, the documented cost of the
-      // opt-in. The caller's task count is preserved, so file sizing
-      // decisions (small-batch coalesce, compaction targets) survive.
-      // `alreadyOrdered` frames (OPTIMIZE's z-/Hilbert-/sort-clustered
-      // rewrites) bypass the staging: re-range-partitioning a frame the
-      // caller just multi-dimensionally clustered would silently destroy
-      // that clustering while recording the commit as OPTIMIZE.
-      val sortCols =
-        if (alreadyOrdered) Nil
-        else props.get(ManagedTable.writeSortPropKey)
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(Nil).filter(df.columns.contains)
-      val staged =
-        if (sortCols.isEmpty) enforced(df1, props)
-        else {
-          val e = enforced(df1, props)
-          val keys = (parts.filter(df.columns.contains) ++ sortCols)
-            .distinct.map(col)
-          val n = math.max(1, e.rdd.getNumPartitions)
-          e.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
-        }
-      val w = staged.write.mode("overwrite")
-        .options(BloomSkip.writeOptions(props))
-      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(out.toString)
-      if (parts.isEmpty) Seq(id)
-      else leafDirs(out, parts.length).map(l => id + "/" + out.relativize(l).toString)
-    } finally prevIdWrite.foreach {
-      case Some(v) =>
-        wsp.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-      case None =>
-        wsp.conf.unset("spark.sql.parquet.fieldId.write.enabled")
-    }
+    // sorted writes (the `graft.write.sortBy` table property — Delta's
+    // optimized-writes + sort practice): each write RANGE-partitions by
+    // the configured columns (partition columns lead, so hive dirs keep
+    // one writer each) and sorts within tasks, so every commit's files
+    // are bound-DISJOINT on the leading sort column and probes skip
+    // inside fresh appends without waiting for an OPTIMIZE rewrite. A
+    // per-task sort alone would only tighten row-group stats — file
+    // min/max needs the range shuffle, the documented cost of the
+    // opt-in. The caller's task count is preserved, so file sizing
+    // decisions (small-batch coalesce, compaction targets) survive.
+    // `alreadyOrdered` frames (OPTIMIZE's z-/Hilbert-/sort-clustered
+    // rewrites) bypass the staging: re-range-partitioning a frame the
+    // caller just multi-dimensionally clustered would silently destroy
+    // that clustering while recording the commit as OPTIMIZE.
+    val sortCols =
+      if (alreadyOrdered) Nil
+      else props.get(ManagedTable.writeSortPropKey)
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+        .getOrElse(Nil).filter(df.columns.contains)
+    val staged =
+      if (sortCols.isEmpty) enforced(df1, props)
+      else {
+        val e = enforced(df1, props)
+        val keys = (parts.filter(df.columns.contains) ++ sortCols)
+          .distinct.map(col)
+        val n = math.max(1, e.rdd.getNumPartitions)
+        e.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
+      }
+    val w = staged.write.mode("overwrite")
+      .options(BloomSkip.writeOptions(props))
+    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(out.toString)
+    if (parts.isEmpty) Seq(id)
+    else leafDirs(out, parts.length).map(l => id + "/" + out.relativize(l).toString)
   }
 
   /** The partition directories exactly `depth` levels below `root`. */
@@ -893,17 +890,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
                          preWritten: Option[(Seq[String], StructType, Seq[String])])
       : Unit = {
     var written: Option[(Seq[String], StructType, Seq[String])] = preWritten
-    var attempts = 0
-    var done = false
-    while (!done) {
-      val e = latestEntry
-      // idempotent-replay check rides the SAME snapshot read the commit
-      // rebases on, so a twin writer that slipped in between retries is
-      // still caught before this version double-applies
-      val alreadyApplied = txn.exists { case (app, v) =>
-        e.properties.get(ManagedTable.txnPropKey(app)).exists(_.toLong >= v)
-      }
-      if (alreadyApplied) return
+    transact(operation, Commute, txn) { e =>
       val newSchema =
         if (mergeSchema) unionSchema(e.schema, df.schema)
         else e.schema
@@ -918,21 +905,9 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
           written = Some((d, newSchema, e.partitionColumns))
           d
       }
-      val newProps = txn.fold(e.properties) { case (app, v) =>
-        e.properties + (ManagedTable.txnPropKey(app) -> v.toString)
-      }
-      try {
-        val newStats = statsFor(dirs, newSchema)
-        commit(LogEntry(e.version + 1, System.currentTimeMillis(), operation,
-          e.dirs ++ dirs, newSchema, e.partitionColumns, newProps,
-          entryFiles(e) ++ newStats,
-          metrics = ManagedTable.writeMetrics(newStats)))
-        done = true
-      } catch {
-        case c: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > 10) throw c
-      }
+      val newStats = statsFor(dirs, newSchema)
+      Some(Actions(e.dirs ++ dirs, entryFiles(e) ++ newStats,
+        ManagedTable.writeMetrics(newStats), schema = Some(newSchema)))
     }
   }
 
@@ -959,101 +934,136 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
   private[tables] def overwriteFrom(baseVersion: Long, df: DataFrame,
                                     operation: String,
                                     cdc: Seq[String] = Nil,
-                                    txn: Option[(String, Long)] = None): Unit = {
-    val e = latestEntry
-    if (txnApplied(e, txn)) return
-    if (e.version != baseVersion)
-      throw new ConcurrentCommitException(
-        s"$operation at $location was computed against v$baseVersion but " +
-          s"the table is at v${e.version}; a full-snapshot rewrite reads " +
-          "everything and cannot rebase over concurrent commits")
-    val aligned = df.select(e.schema.fields.map { f =>
-      col(f.name).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-    val dirs = writeData(aligned, e.partitionColumns, e.properties,
-      tableSchema = e.schema)
-    val newStats = statsFor(dirs, e.schema)
-    commit(LogEntry(baseVersion + 1, System.currentTimeMillis(), operation,
-      dirs, e.schema, e.partitionColumns, withTxnProp(e.properties, txn),
-      newStats,
-      metrics = ManagedTable.writeMetrics(newStats), cdc = cdc))
+                                    txn: Option[(String, Long)] = None): Unit =
+    transact(operation, FailIfMoved(baseVersion), txn) { e =>
+      val aligned = df.select(e.schema.fields.map { f =>
+        col(f.name).cast(f.dataType).as(f.name)
+      }.toIndexedSeq: _*)
+      val dirs = writeData(aligned, e.partitionColumns, e.properties,
+        tableSchema = e.schema)
+      val newStats = statsFor(dirs, e.schema)
+      Some(Actions(dirs, newStats, ManagedTable.writeMetrics(newStats), cdc))
+    }
+
+  // ---- the commit protocol ---------------------------------------------
+
+  /** The one optimistic commit (Delta's OptimisticTransaction): every
+    * version after the first is written here. Each attempt
+    *  1. reads the latest entry — the attempt's snapshot;
+    *  2. returns without committing when `txn`'s (appId, version) is
+    *     already recorded there (the idempotent replay of a streaming
+    *     micro-batch; the marker rides the same commit as the data, so a
+    *     crash can never separate them);
+    *  3. applies `policy` to the commits that landed since its base;
+    *  4. commits `actions` of the snapshot (None: nothing to commit) as
+    *     the next version, stamped with the time and the txn marker.
+    * A lost put-if-absent race starts the next attempt, up to
+    * [[ManagedTable.maxCommitRetries]] retries.
+    *
+    * `actions` runs after the checks of its attempt, so a replayed txn or
+    * a conflict raises before any data is written. Under `Commute` it
+    * runs on every attempt; callers whose data must be written once
+    * memoize the write (a `lazy val` for a Rebase, the staged dirs for an
+    * append).
+    */
+  private def transact(operation: String, policy: OnConflict,
+                       txn: Option[(String, Long)] = None)
+                      (actions: LogEntry => Option[Actions]): Unit = {
+    var baseVersion = -1L
+    var attempts = 0
+    while (true) {
+      val cur = latestEntry
+      if (txn.exists { case (app, v) =>
+            cur.properties.get(ManagedTable.txnPropKey(app)).exists(_.toLong >= v)
+          }) return
+      policy match {
+        case FailIfMoved(v) =>
+          if (baseVersion < 0) baseVersion = if (v >= 0) v else cur.version
+          if (cur.version != baseVersion)
+            throw new ConcurrentCommitException(
+              s"$operation at $location was computed against v$baseVersion " +
+                s"but the table is at v${cur.version}; it read the whole " +
+                "snapshot and cannot rebase over concurrent commits")
+        case Rebase(base, conflict) if cur.version > base.version =>
+          // a rebase would commit data in an outdated layout
+          if (cur.schema != base.schema ||
+              cur.partitionColumns != base.partitionColumns)
+            throw new ConcurrentCommitException(
+              s"$operation at $location conflicts with a concurrent " +
+                "schema/partitioning change " +
+                s"(base v${base.version}, now v${cur.version})")
+          ((base.version + 1) to cur.version).foreach { v =>
+            val d = commitDelta(v).getOrElse(throw new ConcurrentCommitException(
+              s"$operation at $location cannot prove disjointness against " +
+                s"concurrent commit v$v (log entry cleaned up)"))
+            conflict(d).foreach { why =>
+              throw new ConcurrentCommitException(
+                s"$operation at $location (base v${base.version}) conflicts " +
+                  s"with concurrent commit v$v: $why")
+            }
+          }
+        case _ => () // Commute, or nothing landed since the Rebase base
+      }
+      actions(cur) match {
+        case None => return
+        case Some(a) =>
+          val props = a.properties.getOrElse(cur.properties)
+          try {
+            commit(LogEntry(cur.version + 1, System.currentTimeMillis(),
+              operation, a.dirs, a.schema.getOrElse(cur.schema),
+              cur.partitionColumns,
+              txn.fold(props) { case (app, v) =>
+                props + (ManagedTable.txnPropKey(app) -> v.toString)
+              },
+              a.files, a.metrics, a.cdc))
+            return
+          } catch {
+            case c: ConcurrentCommitException =>
+              attempts += 1
+              if (attempts > ManagedTable.maxCommitRetries) throw c
+          }
+      }
+    }
   }
 
-  /** Whether `txn`'s (appId, version) is already recorded on `e` — the
-    * same idempotent-replay rule [[append]] applies, shared by every
-    * read-modify-write commit path a streaming writer drives (MERGE
-    * sinks replay micro-batches exactly like append sinks do). The
-    * marker rides the SAME commit as the data (see [[withTxnProp]]), so
-    * a crash can never separate them.
-    */
-  private def txnApplied(e: LogEntry, txn: Option[(String, Long)]): Boolean =
-    txn.exists { case (app, v) =>
-      e.properties.get(ManagedTable.txnPropKey(app)).exists(_.toLong >= v)
-    }
-
-  private def withTxnProp(props: Map[String, String],
-                          txn: Option[(String, Long)]): Map[String, String] =
-    txn.fold(props) { case (app, v) =>
-      props + (ManagedTable.txnPropKey(app) -> v.toString)
-    }
-
-  // ---- conflict detection for read-modify-write commits ----------------
-
-  /** What one intervening commit changed vs its parent, for conflict
-    * checks: (partition suffixes it touched, file paths it removed, files
-    * it added). Derived from the log alone — every entry records its full
-    * snapshot, so child-vs-parent diffs need no extra commit metadata.
-    * None when the parent entry is unreadable (cleaned up by
+  /** What one intervening commit changed vs its parent, for the Rebase
+    * conflict rules. Derived from the log alone — every entry records its
+    * full snapshot, so child-vs-parent diffs need no extra commit
+    * metadata. None when the parent entry is unreadable (cleaned up by
     * [[cleanupLog]]), in which case disjointness is unprovable and the
-    * caller must treat the commit as conflicting.
+    * commit counts as conflicting.
     */
-  private def commitDelta(v: Long): Option[(Set[String], Set[String], Seq[FileStat])] =
+  private def commitDelta(v: Long): Option[CommitDelta] =
     try {
       val e = readEntry(v)
       val p = readEntry(v - 1)
+      // [[fileDiff]] reports a deletion-vector swap as removed+added, so
+      // the rebase rules (the file rule's both-rewrite check, the
+      // partition rule's touched check) see it; a path-only diff would let
+      // a concurrent MERGE or DV commit silently resurrect the DV-deleted
+      // rows.
+      val (added, removed) = fileDiff(e, p)
       val dirsE = e.dirs.toSet
       val dirsP = p.dirs.toSet
-      val filesE = e.files.map(f => f.path -> f).toMap
-      val filesP = p.files.map(f => f.path -> f).toMap
-      // A deletion-vector-only commit keeps every path but swaps a file's
-      // `dv` ref — logically a rewrite of that file. Treat it as
-      // removed+added so rebase conflict checks (replaceFiles'
-      // both-rewrite rule, overwritePartitions' touched-partition rule)
-      // see it; a path-only diff would let a concurrent MERGE silently
-      // resurrect the DV-deleted rows.
-      val dvChanged = (filesE.keySet intersect filesP.keySet)
-        .filter(p0 => filesE(p0).dv != filesP(p0).dv)
-      val removedPaths = (filesP.keySet diff filesE.keySet) ++ dvChanged
-      val addedFiles =
-        ((filesE.keySet diff filesP.keySet) ++ dvChanged).toSeq.map(filesE)
-      val touched =
-        ((dirsE diff dirsP) ++ (dirsP diff dirsE)).map(ManagedTable.leafSuffix) ++
-          (removedPaths ++ addedFiles.map(_.path))
-            .map(path => ManagedTable.leafSuffix(
-              path.substring(0, path.lastIndexOf('/'))))
-      Some((touched, removedPaths, addedFiles))
+      val touched = ((dirsE diff dirsP) ++ (dirsP diff dirsE) ++
+        (added ++ removed).map(_.leafDir)).map(ManagedTable.leafSuffix)
+      Some(CommitDelta(touched, removed.map(_.path).toSet, added))
     } catch { case _: IllegalStateException => None }
 
-  /** The intervening commits `baseVersion+1 .. latest`, or a conflict
-    * error if any of them changed the schema/partitioning (a rebase would
-    * then commit data in an outdated layout).
+  /** The Rebase rule of file-granular commits (Delta's file-level
+    * conflict rules): an intervening commit conflicts when it removed (or
+    * re-vectored) a file this commit rewrites — one side's changes would
+    * be lost — or added files that `addedMayMatch` cannot rule out:
+    * Delta's ConcurrentAppendException, made precise — a file this
+    * commit WOULD have read, had it run second, conflicts; blind appends
+    * with provably-disjoint key bounds commute.
     */
-  private def interveningDeltas(baseVersion: Long, base: LogEntry,
-                                latest: LogEntry, operation: String):
-      Seq[(Long, (Set[String], Set[String], Seq[FileStat]))] =
-    ((baseVersion + 1) to latest.version).map { v =>
-      if (latest.schema != base.schema ||
-          latest.partitionColumns != base.partitionColumns)
-        throw new ConcurrentCommitException(
-          s"$operation at $location conflicts with a concurrent " +
-            s"schema/partitioning change (base v$baseVersion, now v${latest.version})")
-      commitDelta(v) match {
-        case Some(d) => v -> d
-        case None => throw new ConcurrentCommitException(
-          s"$operation at $location cannot prove disjointness against " +
-            s"concurrent commit v$v (log entry cleaned up)")
-      }
-    }
+  private def fileRule(rewritten: Set[String],
+                       addedMayMatch: Seq[FileStat] => Boolean)
+                      (d: CommitDelta): Option[String] =
+    (d.removed intersect rewritten).headOption.map(p => s"both rewrite $p")
+      .orElse(Option.when(d.added.nonEmpty && addedMayMatch(d.added))(
+        "it added files that may contain this merge's keys"))
 
   /** Partition-scoped overwrite (Delta dynamic `replaceWhere` analog):
     * replaces exactly the partitions in `partitionValues` with `df`'s
@@ -1077,7 +1087,6 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
                           baseVersion: Long = -1L,
                           cdc: Seq[String] = Nil,
                           txn: Option[(String, Long)] = None): Unit = {
-    if (txnApplied(latestEntry, txn)) return
     val base = if (baseVersion >= 0) readEntry(baseVersion) else latestEntry
     val parts = base.partitionColumns
     require(parts.nonEmpty, "overwritePartitions requires a partitioned table")
@@ -1085,47 +1094,34 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       parts.map(p => partitionSegment(p, vs.getOrElse(p,
         throw new IllegalArgumentException(s"missing partition value for $p"))))
         .mkString("/")).toSet
-    val aligned = df.select(base.schema.fields.map { f =>
-      col(f.name).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-    val newLeaves = writeData(aligned, parts, base.properties,
-      tableSchema = base.schema)
-    val stray = newLeaves.map(leafSuffix).filterNot(affected)
-    require(stray.isEmpty,
-      s"overwritePartitions: df contains rows outside the replaced " +
-        s"partitions: ${stray.take(3).mkString(", ")}")
-    val newStats = statsFor(newLeaves, base.schema)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      val cur = latestEntry
-      if (cur.version > base.version)
-        interveningDeltas(base.version, base, cur, operation).foreach {
-          case (v, (touched, _, _)) =>
-            val overlap = touched intersect affected
-            if (overlap.nonEmpty) throw new ConcurrentCommitException(
-              s"$operation at $location (base v${base.version}) conflicts " +
-                s"with concurrent commit v$v on partition(s) " +
-                overlap.take(3).mkString(", "))
-        }
-      // disjoint: rebase — keep the intervening commits' dirs/properties,
-      // swap only the replaced partitions' leaves for ours
+    lazy val newLeaves = {
+      val aligned = df.select(base.schema.fields.map { f =>
+        col(f.name).cast(f.dataType).as(f.name)
+      }.toIndexedSeq: _*)
+      val leaves = writeData(aligned, parts, base.properties,
+        tableSchema = base.schema)
+      val stray = leaves.map(leafSuffix).filterNot(affected)
+      require(stray.isEmpty,
+        s"overwritePartitions: df contains rows outside the replaced " +
+          s"partitions: ${stray.take(3).mkString(", ")}")
+      leaves
+    }
+    lazy val newStats = statsFor(newLeaves, base.schema)
+    val partitionRule = (d: CommitDelta) => {
+      val overlap = d.touched intersect affected
+      Option.when(overlap.nonEmpty)(
+        "it touched partition(s) " + overlap.take(3).mkString(", "))
+    }
+    transact(operation, Rebase(base, partitionRule), txn) { cur =>
+      // disjoint: keep the intervening commits' dirs/properties, swap
+      // only the replaced partitions' leaves for ours
       val kept = cur.dirs.filterNot(d => affected(leafSuffix(d)))
       val keptSet = kept.toSet
-      try {
-        commit(LogEntry(cur.version + 1, System.currentTimeMillis(), operation,
-          kept ++ newLeaves, cur.schema, parts,
-          withTxnProp(cur.properties, txn),
-          entryFiles(cur).filter(f => keptSet(f.leafDir)) ++ newStats,
-          metrics = ManagedTable.writeMetrics(newStats) +
-            ("numReplacedPartitions" -> affected.size.toString),
-          cdc = cdc))
-        done = true
-      } catch {
-        case c: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > 10) throw c
-      }
+      Some(Actions(kept ++ newLeaves,
+        entryFiles(cur).filter(f => keptSet(f.leafDir)) ++ newStats,
+        ManagedTable.writeMetrics(newStats) +
+          ("numReplacedPartitions" -> affected.size.toString),
+        cdc))
     }
   }
 
@@ -1136,19 +1132,13 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     * time travel; they live in still-referenced commit dirs, so [[vacuum]]
     * reclaims them file-by-file once no retained version lists them.
     *
-    * Conflict handling (Delta's file-level conflict rules): computed
-    * against the `base` snapshot the caller planned from (passed as the
-    * already-parsed LogEntry — the planning read IS the conflict base, no
-    * re-read that a racing [[cleanupLog]] could invalidate). On
-    * intervening commits it REBASES — keeping their surviving files —
-    * when BOTH hold for every intervening commit:
-    *  - it removed none of the files this merge rewrites (two merges may
-    *    not rewrite the same file — one's updates would be lost);
-    *  - `addedMayMatch` proves its added files cannot contain this
-    *    merge's keys (Delta's ConcurrentAppendException rule: a file this
-    *    merge WOULD have read, had it run second, conflicts; blind appends
-    *    with provably-disjoint key bounds commute).
-    * Otherwise raises [[ConcurrentCommitException]].
+    * Conflict handling: computed against the `base` snapshot the caller
+    * planned from (passed as the already-parsed LogEntry — the planning
+    * read IS the conflict base, no re-read that a racing [[cleanupLog]]
+    * could invalidate). On intervening commits it REBASES — keeping
+    * their surviving files — unless [[fileRule]] finds a conflict:
+    * `removed` is what this commit rewrites, and `addedMayMatch` decides
+    * whether a concurrently added file may contain this merge's keys.
     */
   private[tables] def replaceFiles(removed: Set[String], df: DataFrame,
                                    operation: String,
@@ -1160,47 +1150,22 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
                                    cdc: Seq[String] = Nil,
                                    txn: Option[(String, Long)] = None,
                                    alreadyOrdered: Boolean = false): Unit = {
-    if (txnApplied(latestEntry, txn)) return
     require(base.files.nonEmpty, "replaceFiles requires a stats-bearing snapshot")
-    val aligned = df.select(base.schema.fields.map { f =>
-      col(f.name).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-    val newDirs = writeData(aligned, base.partitionColumns, base.properties,
-      alreadyOrdered = alreadyOrdered, tableSchema = base.schema)
-    val newStats = statsFor(newDirs, base.schema)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      val cur = latestEntry
-      if (cur.version > base.version)
-        interveningDeltas(base.version, base, cur, operation).foreach {
-          case (v, (_, removedBy, added)) =>
-            val both = removedBy intersect removed
-            if (both.nonEmpty) throw new ConcurrentCommitException(
-              s"$operation at $location (base v${base.version}) conflicts " +
-                s"with concurrent commit v$v: both rewrite ${both.head}")
-            if (added.nonEmpty && addedMayMatch(added))
-              throw new ConcurrentCommitException(
-                s"$operation at $location (base v${base.version}) conflicts " +
-                  s"with concurrent commit v$v: it added files that may " +
-                  "contain this merge's keys")
-        }
+    lazy val newDirs = {
+      val aligned = df.select(base.schema.fields.map { f =>
+        col(f.name).cast(f.dataType).as(f.name)
+      }.toIndexedSeq: _*)
+      writeData(aligned, base.partitionColumns, base.properties,
+        alreadyOrdered = alreadyOrdered, tableSchema = base.schema)
+    }
+    lazy val newStats = statsFor(newDirs, base.schema)
+    transact(operation, Rebase(base, fileRule(removed, addedMayMatch)), txn) { cur =>
       val kept = cur.files.filterNot(f => removed(f.path))
-      val dirs = (kept.map(_.leafDir).distinct ++ newDirs).distinct
-      try {
-        commit(LogEntry(cur.version + 1, System.currentTimeMillis(), operation,
-          dirs, cur.schema, cur.partitionColumns,
-          withTxnProp(cur.properties, txn),
-          kept ++ newStats,
-          metrics = ManagedTable.writeMetrics(newStats) +
-            ("numRemovedFiles" -> removed.size.toString) ++ extraMetrics,
-          cdc = cdc))
-        done = true
-      } catch {
-        case c: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > 10) throw c
-      }
+      Some(Actions((kept.map(_.leafDir).distinct ++ newDirs).distinct,
+        kept ++ newStats,
+        ManagedTable.writeMetrics(newStats) +
+          ("numRemovedFiles" -> removed.size.toString) ++ extraMetrics,
+        cdc))
     }
   }
 
@@ -1547,14 +1512,14 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       replaceFiles(scopeFiles.map(_.path).toSet, ordered,
         operation = "OPTIMIZE", base = e, addedMayMatch = _ => false,
         alreadyOrdered = true)
-    else {
-      val dirs = writeData(ordered, e.partitionColumns, e.properties,
-        alreadyOrdered = true, tableSchema = e.schema)
-      val newStats = statsFor(dirs, e.schema)
-      commit(LogEntry(e.version + 1, System.currentTimeMillis(), "OPTIMIZE",
-        dirs, e.schema, e.partitionColumns, e.properties, newStats,
-        metrics = ManagedTable.writeMetrics(newStats)))
-    }
+    else
+      // a pre-stats snapshot has no file list to rebase over
+      transact("OPTIMIZE", FailIfMoved(e.version)) { _ =>
+        val dirs = writeData(ordered, e.partitionColumns, e.properties,
+          alreadyOrdered = true, tableSchema = e.schema)
+        val newStats = statsFor(dirs, e.schema)
+        Some(Actions(dirs, newStats, ManagedTable.writeMetrics(newStats)))
+      }
   }
 
   /** Row-level change feed between two versions (Delta Change Data Feed
@@ -1776,11 +1741,12 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     * commit falls back to diffing the masked rows of the vector-swapped
     * files, the same derivation RESTORE-across-DV already needs.
     *
-    * Conflicts: a rebase keeps intervening commits when they neither
-    * rewrote NOR re-vectored a touched file and their added files cannot
-    * match the predicate — two DV commits on the same file must
-    * serialize (the second's vector would silently drop the first's
-    * rows), same-file DML rewrites likewise.
+    * Conflicts: [[fileRule]] over the touched files — a rebase keeps
+    * intervening commits when they neither rewrote NOR re-vectored a
+    * touched file ([[commitDelta]] reports a vector swap as a removal)
+    * and their added files cannot match the predicate. Two DV commits on
+    * the same file must serialize (the second's vector would silently
+    * drop the first's rows), same-file DML rewrites likewise.
     */
   private def dvDml(op: String,
                     parsed: org.apache.spark.sql.catalyst.expressions.Expression,
@@ -1847,53 +1813,21 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
           base.properties, tableSchema = base.schema)
         statsFor(dirs, base.schema)
       }
-      var attempts = 0
-      while (true) {
-        val cur = latestEntry
-        if (cur.version > base.version) {
-          interveningDeltas(base.version, base, cur, op).foreach {
-            case (v, (_, removedBy, added)) =>
-              val clash = removedBy intersect touchedPaths
-              if (clash.nonEmpty) throw new ConcurrentCommitException(
-                s"$op at $location (base v${base.version}) conflicts with " +
-                  s"concurrent commit v$v: it rewrote ${clash.head}")
-              if (added.nonEmpty &&
-                  FileStats.prune(added, base.schema, parsed).nonEmpty)
-                throw new ConcurrentCommitException(
-                  s"$op at $location (base v${base.version}) conflicts with " +
-                    s"concurrent commit v$v: it added files that may match")
-          }
-          val curDv = cur.files.map(f => f.path -> f.dv).toMap
-          touched.foreach { f =>
-            if (curDv.get(f.path).exists(_ != f.dv))
-              throw new ConcurrentCommitException(
-                s"$op at $location (base v${base.version}) conflicts with " +
-                  s"a concurrent deletion-vector update on ${f.path}")
-          }
-        }
+      transact(op, Rebase(base, fileRule(touchedPaths,
+          added => FileStats.prune(added, base.schema, parsed).nonEmpty))) { cur =>
         val newFiles = cur.files.map(f =>
           if (touchedPaths(f.path))
             f.copy(dv = Some(dvId), dvRows = Some(
               dvRowsByPath.getOrElse(f.path, 0L)))
           else f) ++ newStats
-        val dirs = (cur.dirs ++ newStats.map(_.leafDir)).distinct
-        try {
-          commit(LogEntry(cur.version + 1, System.currentTimeMillis(),
-            op, dirs, cur.schema, cur.partitionColumns,
-            cur.properties, newFiles,
-            metrics = ManagedTable.writeMetrics(newStats) ++ Map(
-              (if (op == "DELETE") "numDeletedRows" else "numUpdatedRows")
-                -> n.toString,
-              "numDeletionVectorsUpdated" -> touched.size.toString),
-            cdc = cdc))
-          return n
-        } catch {
-          case c: ConcurrentCommitException =>
-            attempts += 1
-            if (attempts > 10) throw c
-        }
+        Some(Actions((cur.dirs ++ newStats.map(_.leafDir)).distinct, newFiles,
+          ManagedTable.writeMetrics(newStats) ++ Map(
+            (if (op == "DELETE") "numDeletedRows" else "numUpdatedRows")
+              -> n.toString,
+            "numDeletionVectorsUpdated" -> touched.size.toString),
+          cdc))
       }
-      n // unreachable
+      n
     } finally { matched.unpersist(); () }
   }
 
@@ -2072,48 +2006,30 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     */
   def addColumns(fields: Seq[StructField]): Unit = {
     val nullable = fields.map(_.copy(nullable = true))
-    var attempts = 0
-    while (true) {
-      val e = latestEntry
+    transact("ADD COLUMNS", Commute) { e =>
       val newSchema = ManagedTable.unionSchema(e.schema, StructType(nullable))
-      if (newSchema == e.schema) return
-      ManagedTable.guardResurrect(e,
-        newSchema.fieldNames.filterNot(e.schema.fieldNames.contains))
-      try {
-        // drop per-commit payloads (see restore()): inherited cdc would
-        // double-emit the previous commit's change rows.
-        commit(e.copy(version = e.version + 1,
-          timestampMs = System.currentTimeMillis(),
-          operation = "ADD COLUMNS", schema = newSchema,
-          metrics = Map.empty, cdc = Nil))
-        return
-      } catch {
-        case c: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > 10) throw c
+      if (newSchema == e.schema) None
+      else {
+        ManagedTable.guardResurrect(e,
+          newSchema.fieldNames.filterNot(e.schema.fieldNames.contains))
+        Some(Actions(e.dirs, e.files, schema = Some(newSchema)))
       }
     }
   }
 
-  def setProperties(props: Map[String, String]): Unit = {
-    val e = latestEntry
-    commit(e.copy(version = e.version + 1,
-      timestampMs = System.currentTimeMillis(),
-      operation = "SET TBLPROPERTIES", properties = e.properties ++ props,
-      metrics = Map.empty, cdc = Nil))
-  }
+  def setProperties(props: Map[String, String]): Unit =
+    transact("SET TBLPROPERTIES", FailIfMoved()) { e =>
+      Some(Actions(e.dirs, e.files, properties = Some(e.properties ++ props)))
+    }
 
   /** Drop table properties by key (absent keys are a no-op, as in
     * Delta's `UNSET TBLPROPERTIES IF EXISTS`).
     */
-  def unsetProperties(keys: Seq[String]): Unit = {
-    val e = latestEntry
-    if (!keys.exists(e.properties.contains)) return
-    commit(e.copy(version = e.version + 1,
-      timestampMs = System.currentTimeMillis(),
-      operation = "UNSET TBLPROPERTIES", properties = e.properties -- keys,
-      metrics = Map.empty, cdc = Nil))
-  }
+  def unsetProperties(keys: Seq[String]): Unit =
+    transact("UNSET TBLPROPERTIES", FailIfMoved()) { e =>
+      Option.when(keys.exists(e.properties.contains))(
+        Actions(e.dirs, e.files, properties = Some(e.properties -- keys)))
+    }
 
   /** Logical ALTER TABLE DROP COLUMN: a schema-only commit — data files
     * keep the column's bytes, every read projects it away. The dropped
@@ -2124,38 +2040,35 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     * pre-drop files. Partition columns and columns referenced by a CHECK
     * constraint refuse (drop the constraint first).
     */
-  def dropColumn(colName: String): Unit = {
-    val e = latestEntry
-    require(e.schema.fieldNames.contains(colName),
-      s"no such column: $colName")
-    require(!e.partitionColumns.contains(colName),
-      s"cannot drop partition column `$colName`")
-    require(e.schema.fields.length > 1,
-      s"cannot drop the table's only column")
-    val newSchema = StructType(e.schema.fields.filterNot(_.name == colName))
-    val probe = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], newSchema)
-    // the column's OWN NOT NULL bookkeeping retires with it; any other
-    // constraint referencing the column must be dropped first
-    checkConstraints.filterNot(_._1 == "notnull_" + colName)
-      .foreach { case (n, ex) =>
-        val resolves =
-          try { probe.select(expr(ex)); true }
-          catch { case _: org.apache.spark.sql.AnalysisException => false }
-        if (!resolves)
-          throw new graft.GraftValueError(
-            s"cannot drop `$colName`: CHECK constraint `$n` ($ex) references " +
-              "it — drop the constraint first")
-      }
-    val dropped = (e.properties.get(ManagedTable.droppedColsKey)
-      .map(_.split(",").toSeq).getOrElse(Nil) :+ colName).distinct
-    commit(e.copy(version = e.version + 1,
-      timestampMs = System.currentTimeMillis(),
-      operation = "DROP COLUMN", schema = newSchema,
-      properties = e.properties - ManagedTable.notNullKey(colName) +
-        (ManagedTable.droppedColsKey -> dropped.mkString(",")),
-      metrics = Map.empty, cdc = Nil))
-  }
+  def dropColumn(colName: String): Unit =
+    transact("DROP COLUMN", FailIfMoved()) { e =>
+      require(e.schema.fieldNames.contains(colName),
+        s"no such column: $colName")
+      require(!e.partitionColumns.contains(colName),
+        s"cannot drop partition column `$colName`")
+      require(e.schema.fields.length > 1,
+        s"cannot drop the table's only column")
+      val newSchema = StructType(e.schema.fields.filterNot(_.name == colName))
+      val probe = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], newSchema)
+      // the column's OWN NOT NULL bookkeeping retires with it; any other
+      // constraint referencing the column must be dropped first
+      constraintsOf(e.properties).filterNot(_._1 == "notnull_" + colName)
+        .foreach { case (n, ex) =>
+          val resolves =
+            try { probe.select(expr(ex)); true }
+            catch { case _: org.apache.spark.sql.AnalysisException => false }
+          if (!resolves)
+            throw new graft.GraftValueError(
+              s"cannot drop `$colName`: CHECK constraint `$n` ($ex) references " +
+                "it — drop the constraint first")
+        }
+      val dropped = (e.properties.get(ManagedTable.droppedColsKey)
+        .map(_.split(",").toSeq).getOrElse(Nil) :+ colName).distinct
+      Some(Actions(e.dirs, e.files, schema = Some(newSchema),
+        properties = Some(e.properties - ManagedTable.notNullKey(colName) +
+          (ManagedTable.droppedColsKey -> dropped.mkString(",")))))
+    }
 
   /** FSCK (Delta's `FSCK REPAIR TABLE` analog): report snapshot file
     * entries whose data file is MISSING on disk (out-of-band deletion,
@@ -2164,46 +2077,41 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     * are lost, which is the point: every read fails until the snapshot
     * matches reality. A missing DELETION-VECTOR sidecar is reported but
     * never repaired: dropping a vector would silently RESURRECT its
-    * deleted rows.
+    * deleted rows. The report and the repair read the same snapshot.
     */
   def fsck(repair: Boolean = false): Seq[String] = {
-    val e = latestEntry
-    require(e.files.nonEmpty || e.dirs.isEmpty,
-      "fsck requires a stats-bearing snapshot (run OPTIMIZE once on " +
-        "legacy tables)")
-    val missingData = e.files.filter(f =>
-      !Files.isRegularFile(dataDir.resolve(f.path)))
-    val missingDv = e.files.flatMap(_.dv).distinct
-      .filter(r => !Files.isDirectory(dvRoot.resolve(r)))
-      .map(r => s"_graft_dv/$r")
-    if (repair && missingDv.nonEmpty)
-      throw new graft.GraftValueError(
-        s"fsck cannot repair missing deletion vectors (${missingDv.take(3)
-          .mkString(", ")}): dropping a vector would resurrect its " +
-          "deleted rows — restore the sidecar or OPTIMIZE from a " +
-          "restorable version")
-    if (repair && missingData.nonEmpty) {
-      val missingSet = missingData.map(_.path).toSet
-      val kept = e.files.filterNot(f => missingSet(f.path))
-      commit(e.copy(version = e.version + 1,
-        timestampMs = System.currentTimeMillis(),
-        operation = "FSCK", files = kept,
-        dirs = kept.map(_.leafDir).distinct,
-        metrics = Map("numRemovedFiles" -> missingData.size.toString),
-        cdc = Nil))
+    var missing = Seq.empty[String]
+    transact("FSCK", FailIfMoved()) { e =>
+      require(e.files.nonEmpty || e.dirs.isEmpty,
+        "fsck requires a stats-bearing snapshot (run OPTIMIZE once on " +
+          "legacy tables)")
+      val missingData = e.files.filter(f =>
+        !Files.isRegularFile(dataDir.resolve(f.path)))
+      val missingDv = e.files.flatMap(_.dv).distinct
+        .filter(r => !Files.isDirectory(dvRoot.resolve(r)))
+        .map(r => s"_graft_dv/$r")
+      missing = missingData.map(_.path) ++ missingDv
+      if (repair && missingDv.nonEmpty)
+        throw new graft.GraftValueError(
+          s"fsck cannot repair missing deletion vectors (${missingDv.take(3)
+            .mkString(", ")}): dropping a vector would resurrect its " +
+            "deleted rows — restore the sidecar or OPTIMIZE from a " +
+            "restorable version")
+      Option.when(repair && missingData.nonEmpty) {
+        val missingSet = missingData.map(_.path).toSet
+        val kept = e.files.filterNot(f => missingSet(f.path))
+        Actions(kept.map(_.leafDir).distinct, kept,
+          Map("numRemovedFiles" -> missingData.size.toString))
+      }
     }
-    missingData.map(_.path) ++ missingDv
+    missing
   }
 
   /** The table's CHECK constraints, name → SQL expression (persisted as
     * `delta.constraints.<name>` properties — the convention the
     * reference's `constraint_append` discovers, `mack/__init__.py:658`).
     */
-  def checkConstraints: Map[String, String] =
-    latestEntry.properties.collect {
-      case (k, v) if k.startsWith(ManagedTable.constraintPrefix) =>
-        k.stripPrefix(ManagedTable.constraintPrefix) -> v
-    }
+  def checkConstraints: Map[String, String] = constraintsOf(latestEntry.properties)
 
   /** ADD CONSTRAINT … CHECK (Delta's `ALTER TABLE ADD CONSTRAINT`):
     * existing rows are validated FIRST (a constraint that the current
@@ -2238,40 +2146,36 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     * rides the same per-row gate as user CHECK constraints, with no
     * second representation to keep the write path aware of.
     */
-  def setNotNull(colName: String): Unit = {
-    val e = latestEntry
-    val f = e.schema.fields.find(_.name == colName).getOrElse(
-      throw new graft.GraftValueError(s"no such column: $colName"))
-    if (!f.nullable) return
-    val bad = toDF.filter(col(colName).isNull).limit(1).collect()
-    if (bad.nonEmpty)
-      throw new graft.GraftValueError(
-        s"cannot SET NOT NULL on `$colName`: existing row has NULL: ${bad.head}")
-    val newSchema = StructType(e.schema.fields.map(x =>
-      if (x.name == colName) x.copy(nullable = false) else x))
-    commit(e.copy(version = e.version + 1,
-      timestampMs = System.currentTimeMillis(),
-      operation = "SET NOT NULL", schema = newSchema,
-      properties = e.properties +
-        (ManagedTable.notNullKey(colName) -> s"`$colName` IS NOT NULL"),
-      metrics = Map.empty, cdc = Nil))
-  }
+  def setNotNull(colName: String): Unit =
+    transact("SET NOT NULL", FailIfMoved()) { e =>
+      val f = e.schema.fields.find(_.name == colName).getOrElse(
+        throw new graft.GraftValueError(s"no such column: $colName"))
+      Option.when(f.nullable) {
+        val bad = snapshotDF(e).filter(col(colName).isNull).limit(1).collect()
+        if (bad.nonEmpty)
+          throw new graft.GraftValueError(
+            s"cannot SET NOT NULL on `$colName`: existing row has NULL: ${bad.head}")
+        val newSchema = StructType(e.schema.fields.map(x =>
+          if (x.name == colName) x.copy(nullable = false) else x))
+        Actions(e.dirs, e.files, schema = Some(newSchema),
+          properties = Some(e.properties +
+            (ManagedTable.notNullKey(colName) -> s"`$colName` IS NOT NULL")))
+      }
+    }
 
   /** ALTER COLUMN … DROP NOT NULL: nullable again, enforcement lifted. */
-  def dropNotNull(colName: String): Unit = {
-    val e = latestEntry
-    val f = e.schema.fields.find(_.name == colName).getOrElse(
-      throw new graft.GraftValueError(s"no such column: $colName"))
-    if (f.nullable && !e.properties.contains(ManagedTable.notNullKey(colName)))
-      return
-    val newSchema = StructType(e.schema.fields.map(x =>
-      if (x.name == colName) x.copy(nullable = true) else x))
-    commit(e.copy(version = e.version + 1,
-      timestampMs = System.currentTimeMillis(),
-      operation = "DROP NOT NULL", schema = newSchema,
-      properties = e.properties - ManagedTable.notNullKey(colName),
-      metrics = Map.empty, cdc = Nil))
-  }
+  def dropNotNull(colName: String): Unit =
+    transact("DROP NOT NULL", FailIfMoved()) { e =>
+      val f = e.schema.fields.find(_.name == colName).getOrElse(
+        throw new graft.GraftValueError(s"no such column: $colName"))
+      Option.when(!f.nullable ||
+          e.properties.contains(ManagedTable.notNullKey(colName))) {
+        val newSchema = StructType(e.schema.fields.map(x =>
+          if (x.name == colName) x.copy(nullable = true) else x))
+        Actions(e.dirs, e.files, schema = Some(newSchema),
+          properties = Some(e.properties - ManagedTable.notNullKey(colName)))
+      }
+    }
 
   /** DROP CONSTRAINT; absent names raise unless `ifExists`. The
     * synthesized `notnull_<col>` constraints refuse here — dropping one
@@ -2809,6 +2713,12 @@ object ManagedTable {
   private[tables] def notNullKey(colName: String): String =
     constraintPrefix + "notnull_" + colName
 
+  /** The CHECK constraints recorded in `props`, name → SQL expression. */
+  private[tables] def constraintsOf(props: Map[String, String]): Map[String, String] =
+    props.collect {
+      case (k, v) if k.startsWith(constraintPrefix) => k.stripPrefix(constraintPrefix) -> v
+    }
+
   /** Tombstoned column names (comma list) — see [[ManagedTable.dropColumn]]. */
   private[tables] val droppedColsKey = "graft.droppedColumns"
 
@@ -2910,6 +2820,50 @@ object ManagedTable {
 
   /** A history checkpoint is rolled forward every this many commits. */
   val checkpointInterval: Long = 20L
+
+  /** Retries of a commit that keeps losing the race for its version. */
+  private[tables] val maxCommitRetries = 10
+
+  /** What one commit changes, computed against the snapshot
+    * [[ManagedTable.transact]] hands it: the new snapshot's leaf dirs and
+    * files, and this commit's own metrics and CDC sidecars (never the
+    * previous commit's). Schema and properties keep the snapshot's values
+    * unless given; partitioning is fixed at version 0.
+    */
+  private[tables] final case class Actions(
+      dirs: Seq[String], files: Seq[FileStat],
+      metrics: Map[String, String] = Map.empty,
+      cdc: Seq[String] = Nil,
+      schema: Option[StructType] = None,
+      properties: Option[Map[String, String]] = None)
+
+  /** How a commit treats the commits that landed after the snapshot it
+    * was computed from (see [[ConcurrentCommitException]]).
+    */
+  private[tables] sealed trait OnConflict
+
+  /** Recompute the actions against the new latest entry and retry. */
+  private[tables] case object Commute extends OnConflict
+
+  /** Raise if the table moved past `baseVersion` (default: the version
+    * the first attempt read).
+    */
+  private[tables] final case class FailIfMoved(baseVersion: Long = -1L)
+      extends OnConflict
+
+  /** Keep the commits after `base` unless `conflict` names a reason in one
+    * of their deltas.
+    */
+  private[tables] final case class Rebase(base: LogEntry,
+                                          conflict: CommitDelta => Option[String])
+      extends OnConflict
+
+  /** What one commit changed vs its parent: the partition suffixes it
+    * touched, the file paths it removed (or re-vectored), the files it
+    * added.
+    */
+  private[tables] final case class CommitDelta(
+      touched: Set[String], removed: Set[String], added: Seq[FileStat])
 
   /** Table-property key recording a writer's last idempotent-append
     * version (see [[ManagedTable.append]]'s `txn`).

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkSpec
+import scala.jdk.CollectionConverters._
 
 /** The concurrency/commute machinery of the file- and partition-granular
   * MERGE paths — the logic a user hits the moment two writers touch one
@@ -25,7 +26,9 @@ import graft.SparkSpec
   *    an overlapping one raises, a concurrent rewrite of the same file
   *    raises;
   *  - concurrent [[ManagedTable.overwritePartitions]] on disjoint
-  *    partitions commute, on overlapping partitions raise.
+  *    partitions commute, on overlapping partitions raise;
+  *  - a replayed txn is checked before any data is written, on every
+  *    commit path that carries one.
   */
 class ConflictSpec extends SparkSpec {
 
@@ -362,6 +365,38 @@ class ConflictSpec extends SparkSpec {
     assert(e.getMessage.contains("conflicts"))
     // writer 1 wins cleanly; no half-applied state
     assert(t.toDF.filter(col("p") === 1).head().getString(1) == "w1")
+  }
+
+  test("a replayed txn commits nothing and writes no data on every " +
+       "txn-carrying commit path, even against a stale base") {
+    val loc = tmpDir("txn_replay")
+    val t = ManagedTable.create(
+      df(pSchema, Seq(Row(1, "a"), Row(2, "b"))), loc, partitionBy = Seq("p"))
+    val stale = t.latestEntry
+    val txn = Some(("app", 7L))
+    t.append(df(pSchema, Seq(Row(3, "c"))), txn = txn) // records app -> 7
+    val replayed = df(pSchema, Seq(Row(1, "replayed")))
+    val paths: Seq[(String, () => Unit)] = Seq(
+      "append" -> (() => t.append(replayed, txn = txn)),
+      "replaceFiles" -> (() => t.replaceFiles(Set(stale.files.head.path),
+        replayed, "MERGE", base = stale, txn = txn)),
+      "overwritePartitions" -> (() => t.overwritePartitions(replayed,
+        Seq(Map("p" -> 1)), "MERGE", baseVersion = stale.version, txn = txn)),
+      "overwriteFrom" -> (() =>
+        t.overwriteFrom(stale.version, replayed, "MERGE", txn = txn)))
+    def dataDirs: Set[String] = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(loc, "data"))
+      try s.iterator().asScala.map(_.getFileName.toString).toSet
+      finally s.close()
+    }
+    paths.foreach { case (name, replay) =>
+      val version = t.latestVersion
+      val dirs = dataDirs
+      replay()
+      assert(t.latestVersion == version, s"$name: a replayed txn added a version")
+      assert(dataDirs == dirs, s"$name: a replayed txn wrote data")
+    }
+    assert(t.toDF.filter(col("v") === "replayed").count() == 0)
   }
 
   test("concurrent partition-bound MERGEs into different partitions both land") {

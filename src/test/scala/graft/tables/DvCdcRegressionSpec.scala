@@ -8,9 +8,11 @@ import graft.SparkSpec
   *    to stale-base rebase conflict checks — a file-pruned rewrite that
   *    planned before the vector landed would otherwise resurrect the
   *    deleted rows;
-  *  - metadata commits built via `LogEntry.copy` (RESTORE / ADD COLUMNS /
-  *    SET TBLPROPERTIES) must not inherit the previous commit's CDC
-  *    sidecar — the feed would re-emit those rows under the new version;
+  *  - metadata and repair commits (RESTORE, ADD COLUMNS, property,
+  *    column and NOT NULL changes, FSCK) must not inherit the previous
+  *    commit's CDC sidecar or metrics — the feed would re-emit those rows
+  *    under the new version, and history would report another
+  *    operation's counts;
   *  - raw-mode (`net = false`) changes() must surface DV deletes/updates
   *    through the sidecar — the snapshot file-diff cannot see them.
   */
@@ -64,6 +66,55 @@ class DvCdcRegressionSpec extends SparkSpec {
     // and per-commit: only the DELETE version carries rows
     val byVersion = t.changes(v0).groupBy("_commit_version").count().collect()
     assert(byVersion.length == 1)
+  }
+
+  test("metadata and repair commits carry only their own metrics and no " +
+       "change rows") {
+    val t = ManagedTable.create(
+      spark.range(1000).select(col("id").as("k"), (col("id") * 3).as("v"),
+        lit("x").as("w")),
+      tmpDir("dvc6"),
+      properties = Map(
+        ManagedTable.dvPropKey -> "true",
+        ManagedTable.cdfPropKey -> "true",
+        "graft.note" -> "x"))
+    t.optimize(targetFileSizeBytes = 2 * 1024, sortBy = Seq("k"))
+    val v0 = t.latestVersion
+    assert(t.delete("k < 10") == 10) // writes a CDC sidecar
+    assert(t.latestEntry.cdc.nonEmpty, "setup: the DELETE must write a sidecar")
+    val deleteVersion = t.latestVersion
+    // FSCK repairs a file the DELETE did not touch, lost out of band
+    val lost = t.fileStats.maxBy(_.max("k").toLong)
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "UNSET TBLPROPERTIES" -> (() => t.unsetProperties(Seq("graft.note"))),
+      "DROP COLUMN" -> (() => t.dropColumn("w")),
+      "DROP NOT NULL" -> (() => t.dropNotNull("k")),
+      "SET NOT NULL" -> (() => t.setNotNull("k")),
+      "FSCK" -> { () =>
+        java.nio.file.Files.delete(t.dataFilePath(lost.path))
+        assert(t.fsck(repair = true) == Seq(lost.path))
+      })
+    ops.foreach { case (op, run) =>
+      val before = t.latestVersion
+      run()
+      assert(t.latestVersion == before + 1, s"$op must commit")
+      assert(t.latestEntry.operation == op)
+      assert(t.latestEntry.cdc.isEmpty, s"$op inherited a CDC sidecar")
+    }
+    val metrics = t.history.collect()
+      .map(r => r.getLong(0) -> r.getMap[String, String](3).toMap).toMap
+    assert(metrics(deleteVersion)("numDeletedRows") == "10")
+    ((deleteVersion + 1) until t.latestVersion).foreach { v =>
+      assert(metrics(v).isEmpty, s"v$v carries metrics it did not produce: ${metrics(v)}")
+    }
+    assert(metrics(t.latestVersion) == Map("numRemovedFiles" -> "1"))
+    // the feed up to the repair (which dropped an unreadable file) holds
+    // exactly the DELETE's rows, once, under the DELETE's version
+    val feed = t.changes(v0, t.latestVersion - 1)
+      .select("_change_type", "k", "_commit_version").collect()
+    assert(feed.map(_.getLong(1)).sorted.toSeq == (0L until 10L))
+    assert(feed.forall(r => r.getString(0) == "delete" &&
+      r.getLong(2) == deleteVersion))
   }
 
   test("RESTORE across a DV commit feeds changes() — re-exposed rows are " +
