@@ -1,5 +1,7 @@
 package graft.tables
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{coalesce, lit, udf, unix_date, unix_micros}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{
@@ -443,15 +445,24 @@ object FileStats {
     files => files.filter { f =>
       (for { lo <- f.min.get(name); hi <- f.max.get(name) } yield {
         val l = parse(lo)
-        var a = 0
-        var b = keys.length
-        while (a < b) {
-          val m = (a + b) >>> 1
-          if (ord.lt(keys(m), l)) a = m + 1 else b = m
-        }
+        val a = prefixLength(keys)(ord.lt(_, l))
         a < keys.length && ord.lteq(keys(a), parse(hi))
       }).getOrElse(true)
     }
+
+  /** How many leading elements of `xs` satisfy `p`, which holds on a
+    * prefix of `xs` (a sorted sequence and a monotone predicate): one
+    * binary search.
+    */
+  private def prefixLength[T](xs: IndexedSeq[T])(p: T => Boolean): Int = {
+    var a = 0
+    var b = xs.length
+    while (a < b) {
+      val m = (a + b) >>> 1
+      if (p(xs(m))) a = m + 1 else b = m
+    }
+    a
+  }
 
   /** Files whose bounds on `colName` may intersect [lo, hi] (inclusive).
     * Used when the source key set is too large to enumerate.
@@ -469,6 +480,116 @@ object FileStats {
       (for { fLo <- fs.min.get(f.name); fHi <- fs.max.get(f.name) }
         yield cmp(d, fLo, h) <= 0 && cmp(d, fHi, l) >= 0).getOrElse(true)
     }).getOrElse(files)
+  }
+
+  // ---- layout ----------------------------------------------------------
+
+  /** A set of files ordered by their [min, max] on one column, the bounds
+    * decoded into the column's domain: the layout MERGE's rewrite keeps
+    * and sortBy OPTIMIZE repairs.
+    */
+  private[tables] sealed trait KeyRanges {
+    /** The files, ordered by their lower bound. */
+    def files: IndexedSeq[FileStat]
+    /** Per file of [[files]]: does its range intersect no other file's? */
+    def isolated: IndexedSeq[Boolean]
+    /** No two files' ranges intersect. */
+    def disjoint: Boolean = isolated.forall(identity)
+    /** How many values [[slotOf]] can give: one per file, plus one for
+      * the keys no file can take when there are fences.
+      */
+    def slots: Int
+    /** Each row's slot for `key`: the position in [[files]] of the file
+      * whose range holds it. A key between two files goes to the one below
+      * it, or to the one above it when a fence (a file outside this set)
+      * lies between it and the one below; a key below the first file goes
+      * to the first. A key that would carry every candidate's range over a
+      * fence goes to the extra slot, and a NULL key to slot 0.
+      */
+    def slotOf(key: Column): Column
+  }
+
+  /** [[KeyRanges.slotOf]] over sorted lower bounds `lo`, upper bounds
+    * `hi`, and per file the nearest fence bound above (`up`) and below
+    * (`down`) its range.
+    */
+  private final case class Slots[T](lo: IndexedSeq[T], hi: IndexedSeq[T],
+                                    up: IndexedSeq[Option[T]], down: IndexedSeq[Option[T]])(
+      implicit ord: Ordering[T]) {
+    def apply(k: T): Int = {
+      val i = math.max(prefixLength(lo)(ord.lteq(_, k)) - 1, 0)
+      if (ord.lt(k, lo(i))) { if (down(i).forall(ord.lt(_, k))) i else lo.size }
+      else if (ord.lteq(k, hi(i)) || up(i).forall(ord.gt(_, k))) i
+      else if (i + 1 < lo.size && down(i + 1).forall(ord.lt(_, k))) i + 1
+      else lo.size
+    }
+  }
+
+  private final class Ranges[T](bounds: Seq[(FileStat, T, T)], fences: Seq[(T, T)],
+                                udfOf: Slots[T] => Column => Column)(
+      implicit ord: Ordering[T]) extends KeyRanges {
+    private val sorted = bounds.sortBy(_._2).toIndexedSeq
+    val files: IndexedSeq[FileStat] = sorted.map(_._1)
+    private val lo = sorted.map(_._2)
+    private val hi = sorted.map(_._3)
+    // sorted by lower bound, a file meets an earlier one iff the largest
+    // upper bound before it reaches its lower bound, and a later one iff
+    // its upper bound reaches the next lower bound
+    def isolated: IndexedSeq[Boolean] = {
+      val maxHi = hi.scanLeft(Option.empty[T])((m, h) => Some(m.fold(h)(ord.max(_, h))))
+      lo.indices.map(i =>
+        !maxHi(i).exists(ord.gteq(_, lo(i))) &&
+          !(i + 1 < lo.size && ord.gteq(hi(i), lo(i + 1))))
+    }
+    def slots: Int = files.size + (if (fences.isEmpty) 0 else 1)
+    def slotOf(key: Column): Column = {
+      val fenceLo = fences.map(_._1).sorted.toIndexedSeq
+      val fenceHi = fences.map(_._2).sorted.toIndexedSeq
+      // the smallest fence lower bound above h / largest upper bound below l
+      def above(h: T) = fenceLo.lift(prefixLength(fenceLo)(ord.lteq(_, h)))
+      def below(l: T) = fenceHi.lift(prefixLength(fenceHi)(ord.lt(_, l)) - 1)
+      coalesce(udfOf(Slots(lo, hi, hi.map(above), lo.map(below)))(key), lit(0))
+    }
+  }
+
+  /** The non-empty `files` as [[KeyRanges]] on `colName` (an empty file
+    * holds no key and takes no slot), with the bounded files of `fences`
+    * as fences; None when the column has no comparison domain or a
+    * non-empty file has no bounds on it. The slot is a UDF over the key
+    * lowered into the stats domain (a NULL key gives NULL).
+    */
+  private[tables] def keyRanges(files: Seq[FileStat], schema: StructType, colName: String,
+                                fences: Seq[FileStat] = Nil): Option[KeyRanges] = {
+    def bounds(name: String)(f: FileStat) =
+      for { l <- f.min.get(name); h <- f.max.get(name) } yield (f, l, h)
+    for {
+      field <- schema.fields.find(_.name == colName)
+        .orElse(schema.fields.find(_.name.equalsIgnoreCase(colName)))
+      dom <- domainOf(field.dataType)
+      bs = files.filter(_.rows > 0).map(bounds(field.name))
+      if bs.forall(_.isDefined)
+    } yield {
+      val fs = fences.flatMap(bounds(field.name))
+      def ranges[T: Ordering](p: String => T)(udfOf: Slots[T] => Column => Column) =
+        new Ranges[T](bs.flatten.map { case (f, l, h) => (f, p(l), p(h)) },
+          fs.map { case (_, l, h) => (p(l), p(h)) }, udfOf)
+      dom match {
+        case LongDom =>
+          val asLong: Column => Column = field.dataType match {
+            case DateType => unix_date
+            case TimestampType => unix_micros
+            case _ => _.cast(LongType)
+          }
+          ranges(_.toLong)(s => k => udf((x: Long) => s(x)).apply(asLong(k)))
+        case DoubleDom =>
+          ranges(_.toDouble)(s => k => udf((x: Double) => s(x)).apply(k.cast(DoubleType)))(
+            Ordering.Double.TotalOrdering)
+        case StringDom =>
+          ranges(UTF8String.fromString)(s => k =>
+            udf((x: String) => if (x == null) 0 else s(UTF8String.fromString(x))).apply(k))(
+            Utf8Order)
+      }
+    }
   }
 
   /** External (Row-collected) value → canonical domain string. */

@@ -942,7 +942,10 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       val dirs = writeData(aligned, e.partitionColumns, e.properties,
         tableSchema = e.schema)
       val newStats = statsFor(dirs, e.schema)
-      Some(Actions(dirs, newStats, ManagedTable.writeMetrics(newStats), cdc))
+      // a legacy entry (dirs without a file list) cannot count its files
+      val removed = Option.when(e.files.nonEmpty || e.dirs.isEmpty)(
+        "numRemovedFiles" -> e.files.size.toString)
+      Some(Actions(dirs, newStats, ManagedTable.writeMetrics(newStats) ++ removed, cdc))
     }
 
   // ---- the commit protocol ---------------------------------------------
@@ -1365,9 +1368,15 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     * files of about that size (Delta's bin-packing OPTIMIZE — right-sized
     * files are untouched, so repeated OPTIMIZE on a growing table only
     * ever rewrites the new small files; an already-compacted table is a
-    * no-op that burns no version). With `sortBy`/`zorderBy` the whole
-    * snapshot is re-clustered instead — that is the point of those forms.
-    * History is preserved, and [[vacuum]] then reclaims the fragments.
+    * no-op that burns no version). `sortBy` on an unpartitioned table is
+    * incremental as well: only the files out of place on the leading sort
+    * column — overlapping another file, outside [target/2, 2·target], or
+    * carrying a deletion vector — are range-partitioned again, and a table
+    * already laid out commits nothing (see [[optimizeRuns]]). `zorderBy`,
+    * and `sortBy` on a partitioned table or over files without bounds on
+    * the leading column, re-cluster the whole snapshot — that is the point
+    * of those forms. History is preserved, and [[vacuum]] then reclaims
+    * the fragments.
     * Partitioned tables hash-cluster rows so each partition compacts to
     * one file per write task that owns it (typically one).
     *
@@ -1433,8 +1442,8 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     // only files below the size target are rewritten; right-sized files
     // stay verbatim in the snapshot. On a 100 TB table that has been
     // compacted before, an OPTIMIZE after a day of small appends
-    // rewrites the day's files, not the table. sortBy/zorderBy rewrites
-    // stay global — re-clustering the whole snapshot is their point.
+    // rewrites the day's files, not the table. sortBy rewrites only the
+    // files out of place ([[optimizeRuns]]); zorderBy stays global.
     if (sortBy.isEmpty && zorderBy.isEmpty && e.files.nonEmpty) {
       // dv-bearing files join the compaction set REGARDLESS of size:
       // rewriting them through the masked read materializes their
@@ -1455,6 +1464,15 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
         operation = "OPTIMIZE", base = e, addedMayMatch = _ => false)
       return
     }
+    // sortBy on an unpartitioned table is incremental too when every file
+    // has bounds on the leading sort column: only files out of place move
+    if (sortBy.nonEmpty && e.partitionColumns.isEmpty && e.files.nonEmpty)
+      FileStats.keyRanges(e.files, e.schema, sortBy.head) match {
+        case Some(ranges) =>
+          optimizeRuns(e, ranges, targetFileSizeBytes, sortBy)
+          return
+        case None => // a file without bounds: re-sort the whole snapshot
+      }
     val scopeFiles = e.files.filter(inScope)
     if (partitions.nonEmpty && scopeFiles.isEmpty) return // nothing matches
     val baseBytes =
@@ -1520,6 +1538,57 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
         val newStats = statsFor(dirs, e.schema)
         Some(Actions(dirs, newStats, ManagedTable.writeMetrics(newStats)))
       }
+  }
+
+  /** The incremental sortBy OPTIMIZE of an unpartitioned table (Delta's
+    * incremental OPTIMIZE: files already laid out stay as they are).
+    * Ordered by their lower bound on the leading sort column, a file is in
+    * place when its range meets no other file's, its size is within
+    * [target/2, 2·target] and it has no deletion vector. Key-adjacent
+    * files out of place form a run. A run of one small file between
+    * in-place neighbours is left alone, like bin-packing's "fewer than 2
+    * small files" rule. Each other run is range-partitioned on its own, so
+    * no output straddles two runs and every output stays clear of the
+    * in-place files; all runs, and any empty files, are replaced in one
+    * commit, and no run commits nothing.
+    *
+    * A run is sized by its live rows at the densest file's bytes per row
+    * (at most its bytes): merging small files sheds their per-file
+    * overhead, and sizing by their summed bytes would write files that
+    * the next OPTIMIZE finds too small and merges again. It is cut into
+    * the whole number of files nearest to the target size, so a file just
+    * past 2·target becomes two files, not three well below the target
+    * (every file repeats its column dictionaries).
+    */
+  private def optimizeRuns(e: LogEntry, ranges: FileStats.KeyRanges,
+                           target: Long, sortBy: Seq[String]): Unit = {
+    val fs = ranges.files
+    val inPlace = fs.zip(ranges.isolated).map { case (f, isolated) =>
+      isolated && f.dv.isEmpty && f.bytes >= target / 2 && f.bytes <= 2 * target
+    }
+    val runs = fs.indices.filterNot(inPlace)
+      .foldLeft(Vector.empty[Vector[Int]]) { (acc, i) =>
+        if (acc.lastOption.exists(_.last == i - 1)) acc.init :+ (acc.last :+ i)
+        else acc :+ Vector(i)
+      }
+      .map(_.map(fs))
+      .filterNot(r => r.size == 1 && r.head.dv.isEmpty && r.head.bytes < target / 2)
+    if (runs.isEmpty) return
+    val dense = e.files.maxBy(_.rows)
+    val bytesPerRow = dense.bytes.toDouble / math.max(1L, dense.rows)
+    def numFiles(run: Seq[FileStat]): Int = {
+      val live = run.map(f => f.rows - f.dvRows.getOrElse(0L)).sum
+      val bytes = math.min(run.map(_.bytes).sum.toDouble, live * bytesPerRow)
+      math.max(1, math.round(bytes / target).toInt)
+    }
+    val keys = sortBy.map(col)
+    val ordered = runs.map(run =>
+      readFilesDF(run, e.schema, e.version).repartitionByRange(numFiles(run), keys: _*))
+      .reduce(_ union _)
+      .sortWithinPartitions(keys: _*)
+    replaceFiles((runs.flatten ++ e.files.filter(_.rows == 0)).map(_.path).toSet, ordered,
+      operation = "OPTIMIZE", base = e, addedMayMatch = _ => false,
+      alreadyOrdered = true)
   }
 
   /** Row-level change feed between two versions (Delta Change Data Feed

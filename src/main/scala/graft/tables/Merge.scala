@@ -41,8 +41,11 @@ import org.apache.spark.storage.StorageLevel
   * deleted and unclaimed rows, and one projection writes every column
   * through the clause that applies. The target is scanned once; the CDC
   * sidecar ([[Builder.changesFrame]]) is derived from the same classified
-  * frame. A commit range-partitions the rows by the merge key before
-  * writing, so rewritten files keep disjoint key ranges. This is Delta's
+  * frame. A commit lays the rows out by the merge key before writing: each
+  * replaced file becomes one new file over its own key range when the
+  * replaced files are disjoint on the key, else the rows are
+  * range-partitioned by it, so rewritten files keep disjoint key ranges
+  * ([[Builder]]'s `rewrite`). This is Delta's
   * MergeIntoCommand rewrite: one outer join over the touched files,
   * which [[Builder.execute]] narrows first by partition values or by the
   * merge-key bounds of each file (one driver-side collect of the
@@ -399,7 +402,7 @@ object Merge {
             values.map(m => parts.map(p => col(p) <=> lit(m(p))).reduce(_ && _))
               .reduce(_ || _)
         val pruned = copy(target = target.filter(pred))
-        table.overwritePartitions(pruned.rewrite(base), values, operation = "MERGE",
+        table.overwritePartitions(pruned.rewrite(base, Nil), values, operation = "MERGE",
           baseVersion = baseVersion, cdc = pruned.cdcFor(table, base),
           txn = txn)
       } else if (!executeFilePruned(table, base)) overwriteAt(table, base)
@@ -408,7 +411,7 @@ object Merge {
     /** The full-snapshot rewrite every unprunable merge commits. */
     private[tables] def overwriteAt(table: ManagedTable,
                                     base: ManagedTable.LogEntry): Unit =
-      table.overwriteFrom(base.version, rewrite(base), "MERGE",
+      table.overwriteFrom(base.version, rewrite(base, base.files), "MERGE",
         cdc = cdcFor(table, base), txn = txn)
 
     /** File-granular MERGE (Delta's find-touched-files): files whose
@@ -452,7 +455,7 @@ object Merge {
       // read it — i.e. it survives the same key-bounds filters that
       // selected the touched files. A blind append with provably-disjoint
       // key bounds commutes (both commits land).
-      table.replaceFiles(touched.map(_.path).toSet, rewrite(base), operation = "MERGE",
+      table.replaceFiles(touched.map(_.path).toSet, rewrite(base, touched), operation = "MERGE",
         base = base,
         addedMayMatch = added =>
           keyFilters.foldLeft(added)((fs, f) => f(fs)).nonEmpty,
@@ -736,24 +739,44 @@ object Merge {
       c.filter(ok && !clauseIn(deleteIdxs)).select(postImage: _*)
     }
 
-    /** [[run]]'s rows as a commit writes them: range-partitioned by the
-      * table's partition columns and the first equi-bound merge-key
-      * column, so each written file holds one contiguous key range. The
-      * outer join leaves its rows hash-partitioned by the key; written as
-      * they are, every file would span the whole rewritten key range and
-      * skip nothing for later merges and point reads. A table with a
+    /** [[run]]'s rows as a commit writes them, laid out by the first
+      * equi-bound merge-key column so that each written file holds one
+      * contiguous key range (the outer join leaves its rows hash-partitioned
+      * by the key; written as they are, every file would span the whole
+      * rewritten key range and skip nothing for later merges and point
+      * reads).
+      *
+      * When the `replaced` files (the touched files of a pruned merge, or
+      * the whole snapshot of a full rewrite) are pairwise disjoint on that
+      * key, the rewrite keeps their layout: each row goes to the replaced
+      * file whose key range holds it ([[FileStats.KeyRanges.slotOf]]), and
+      * each replaced file becomes exactly one new file over its own range,
+      * extended by the keys inserted beyond it but never over a kept file
+      * (an inserted key that no replaced file can take without crossing a
+      * kept file gets one extra file). That needs no sample job,
+      * and neither AQE nor the shuffle-partition count changes how many
+      * files are written or how large they are; sortBy OPTIMIZE splits the
+      * files that outgrow the target. Otherwise (overlapping files, a key
+      * without bounds, a partitioned table) the rows are range-partitioned
+      * by the partition columns and the key. A table with a
       * `graft.write.sortBy` property is range-partitioned by the write
       * itself, and a merge without an equi-binding keeps the join's layout.
       */
-    private def rewrite(base: ManagedTable.LogEntry): DataFrame = {
+    private def rewrite(base: ManagedTable.LogEntry, replaced: Seq[FileStat]): DataFrame = {
       val key = equiBindings.iterator
         .flatMap { case (n, _, _) => target.columns.find(_.equalsIgnoreCase(n)) }
         .nextOption()
       val sortedWrite =
         base.properties.get(ManagedTable.writeSortPropKey).exists(_.trim.nonEmpty)
       val out = run()
-      key.filterNot(_ => sortedWrite).fold(out)(k =>
-        out.repartitionByRange((base.partitionColumns :+ k).distinct.map(col): _*))
+      key.filterNot(_ => sortedWrite).fold(out) { k =>
+        val kept = base.files.filterNot(replaced.toSet)
+        val layout = Option.when(base.partitionColumns.isEmpty)(
+          FileStats.keyRanges(replaced, base.schema, k, fences = kept)).flatten
+          .filter(r => r.files.nonEmpty && r.disjoint)
+        layout.fold(out.repartitionByRange((base.partitionColumns :+ k).distinct.map(col): _*))(
+          r => out.repartitionById(r.slots, r.slotOf(col(k))))
+      }
     }
 
     /** The labeled net change rows this merge produces (Delta CDF's MERGE

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.{GraftTypeError, SparkSpec}
 import graft.tables.ManagedTable
 
@@ -162,41 +161,6 @@ class Scd2Spec extends SparkSpec {
         "pkey", Seq("attr")))
   }
 
-  /** Spark jobs triggered while running `body`, counted by job-group tag
-    * so concurrent suite activity on the shared SparkContext can never
-    * inflate the count. `body` runs synchronously, so every job it
-    * triggers has STARTED before it returns; the settle loop only waits
-    * out the async listener-bus delivery of those already-started events.
-    */
-  private def countJobs(body: => Unit): Int = {
-    val group = s"scd2spec-${java.util.UUID.randomUUID()}"
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        val g = Option(jobStart.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) { counter.incrementAndGet(); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "Scd2Spec.countJobs")
-    try {
-      body
-      var last = -1
-      var settled = 0
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (settled < 3 && System.nanoTime() < deadline) {
-        val cur = counter.get()
-        if (cur == last) settled += 1 else { settled = 0; last = cur }
-        Thread.sleep(50)
-      }
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    counter.get()
-  }
-
   test("a file-pruned upsert on a pk-sorted table stays within its Spark " +
        "job budget (one key collect, one staging read of the touched file)") {
     def rows(r: Range) = df(baseSchema,
@@ -220,11 +184,11 @@ class Scd2Spec extends SparkSpec {
     assert(cur.size == 301 && cur(150) == "CHANGED" && cur(160) == "a160" &&
       cur(1000) == "NEW")
     assert(t.toDF.count() == 302)
-    // 9 jobs: the key collect (distinct over a non-local frame: 2) and the
-    // write (7: one outer join over the touched file, staged against that
-    // file only: 4, the match-count window's shuffle: 1, and the range
-    // partitioning by pkey, its sample and its shuffle: 2). Budget 1.25 x 9.
+    // 8 jobs: the key collect (distinct over a non-local frame: 2) and the
+    // write (6: one outer join over the touched file, staged against that
+    // file only: 4, the match-count window's shuffle: 1, and the shuffle
+    // that keeps the touched file's layout: 1, with no sample job).
     info(s"pruned SCD2 upsert ran $jobs Spark jobs")
-    assert(jobs <= 11, s"pruned SCD2 upsert ran $jobs Spark jobs (budget 11)")
+    assert(jobs <= 8, s"pruned SCD2 upsert ran $jobs Spark jobs (budget 8)")
   }
 }

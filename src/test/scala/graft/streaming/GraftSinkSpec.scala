@@ -223,40 +223,6 @@ class GraftSinkSpec extends SparkSpec {
     assert(got == Seq((1L, 9L), (2L, 7L)), s"latest seq wins per key: $got")
   }
 
-  /** Spark jobs triggered while running `body` (the ConflictSpec
-    * pattern): counted by job-group tag so concurrent suite activity on
-    * the shared context cannot inflate the count.
-    */
-  private def countJobs(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"gsinkspec-${java.util.UUID.randomUUID()}"
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        val g = Option(jobStart.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) { counter.incrementAndGet(); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "GraftSinkSpec.countJobs")
-    try {
-      body
-      var last = -1
-      var settled = 0
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (settled < 3 && System.nanoTime() < deadline) {
-        val cur = counter.get()
-        if (cur == last) settled += 1 else { settled = 0; last = cur }
-        Thread.sleep(50)
-      }
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    counter.get()
-  }
-
   test("the duplicate-key guard is fused into the merge pass: a merge " +
        "batch without a sequenceColumn costs no more Spark jobs than " +
        "one with it") {

@@ -283,35 +283,6 @@ class StreamingDedupSpec extends SparkSpec {
     assert(out.toDF.select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 3L, 5L))
   }
 
-  /** Spark jobs started while `body` runs: a listener counts every job
-    * start and the loop waits until the count settles (the listener bus
-    * delivers asynchronously). Not filtered by job group: the commit tail
-    * runs two appends on pool threads that do not inherit the caller's
-    * local properties, and suites in the forked test JVM run one at a time.
-    */
-  private def countJobs(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1
-      var settled = 0
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (settled < 3 && System.nanoTime() < deadline) {
-        val cur = counter.get()
-        if (cur == last) settled += 1 else { settled = 0; last = cur }
-        Thread.sleep(50)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    counter.get()
-  }
-
   test("a non-first batch runs a bounded number of Spark jobs") {
     val index = StreamingDedup.openIndex(spark, tmpDir("sdjobs"), "doc_id",
       org.apache.spark.sql.types.LongType, parts = 4)
@@ -323,10 +294,11 @@ class StreamingDedupSpec extends SparkSpec {
     val b2 = Seq((10L, nearDup), (11L, third), (12L, third)).toDF("doc_id", "text")
     b2.count() // materialize the local relation outside the counted region
     var n = -1L
-    val jobs = countJobs {
+    // every thread's jobs: the commit tail appends on pool threads
+    val jobs = countJobs({
       n = StreamingDedup.incremental(b2, "doc_id", "text", index, out,
         txn = ("jobs", 1L), threshold = 0.5)
-    }
+    }, allThreads = true)
     assert(n == 1)
     assert(jobs <= MaxJobsPerBatch, s"$jobs Spark jobs for one batch")
   }

@@ -3,7 +3,6 @@ package graft.tables
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkSpec
 import scala.jdk.CollectionConverters._
 
@@ -185,41 +184,6 @@ class ConflictSpec extends SparkSpec {
           "only the boundless NULL-key file survives the range filter")
       case other => fail(s"expected Pruned, got $other")
     }
-  }
-
-  /** Spark jobs triggered while running `body`, counted by job-group tag
-    * so concurrent suite activity on the shared SparkContext can never
-    * inflate the count. `body` runs synchronously, so every job it
-    * triggers has STARTED before it returns; the settle loop only waits
-    * out the async listener-bus delivery of those already-started events.
-    */
-  private def countJobs(body: => Unit): Int = {
-    val group = s"conflictspec-${java.util.UUID.randomUUID()}"
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        val g = Option(jobStart.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) { counter.incrementAndGet(); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "ConflictSpec.countJobs")
-    try {
-      body
-      var last = -1
-      var settled = 0
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (settled < 3 && System.nanoTime() < deadline) {
-        val cur = counter.get()
-        if (cur == last) settled += 1 else { settled = 0; last = cur }
-        Thread.sleep(50)
-      }
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    counter.get()
   }
 
   test("the NULL probe is fused into the range aggregation: a null-safe " +

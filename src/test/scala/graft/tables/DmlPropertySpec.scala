@@ -67,6 +67,15 @@ class DmlPropertySpec extends SparkSpec {
             if (n == 0) assert(t.latestVersion == before, "no-op update burned a version")
           case 3 => // compaction: contents unchanged, CDF silent
             t.optimize(targetFileSizeBytes = 4 * 1024, sortBy = Seq("k"))
+            // the files are then disjoint on k, and laid out for good
+            val bounds = t.fileStats.map(f => (f.min("k").toLong, f.max("k").toLong)).sorted
+            assert(bounds.zip(bounds.tail).forall { case ((_, hi), (lo, _)) => hi < lo },
+              s"case $i: files overlap on k after OPTIMIZE: $bounds")
+            val v = t.latestVersion
+            val laidOut = t.fileStats.map(f => (f.min("k"), f.max("k"), f.rows, f.bytes, f.dv))
+            t.optimize(targetFileSizeBytes = 4 * 1024, sortBy = Seq("k"))
+            assert(t.latestVersion == v,
+              s"case $i: a second OPTIMIZE burned a version over $laidOut")
         }
       }
 

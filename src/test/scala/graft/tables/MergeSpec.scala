@@ -254,12 +254,15 @@ class MergeSpec extends SparkSpec {
     * single-partition commit each), so a merge whose keys lie in 11-20
     * rewrites only the middle file.
     */
-  private def threeFiles(prefix: String): ManagedTable = {
+  private def threeFiles(prefix: String): ManagedTable =
+    filesOver(prefix, 1 to 10, 11 to 20, 21 to 30)
+
+  /** One single-file commit per range of `pkeys`. */
+  private def filesOver(prefix: String, pkeys: Range*): ManagedTable = {
     def rows(r: Range) = df(schema, r.map(i => Row(i, s"v$i"))).coalesce(1)
-    val t = ManagedTable.create(rows(1 to 10), tmpDir(prefix))
-    t.append(rows(11 to 20))
-    t.append(rows(21 to 30))
-    assert(t.fileStats.size == 3, "setup: one file per commit")
+    val t = ManagedTable.create(rows(pkeys.head), tmpDir(prefix))
+    pkeys.tail.foreach(r => t.append(rows(r)))
+    assert(t.fileStats.size == pkeys.size, "setup: one file per commit")
     t
   }
 
@@ -431,38 +434,85 @@ class MergeSpec extends SparkSpec {
 
   // ---- the written layout ----------------------------------------------
 
+  private def pkBounds(t: ManagedTable): Seq[(Int, Int)] =
+    t.fileStats.map(f => (f.min("pkey").toInt, f.max("pkey").toInt)).sortBy(_._1)
+
+  private def assertDisjoint(bounds: Seq[(Int, Int)]): Unit =
+    assert(bounds.zip(bounds.tail).forall { case ((_, hi), (lo, _)) => hi < lo },
+      s"files overlap on pkey: $bounds")
+
+  private def upsert(t: ManagedTable, keys: Seq[Int]): Unit =
+    Merge.into(t.toDF, "base")
+      .using(df(schema, keys.map(i => Row(i, s"u$i"))), "src", "base.pkey = src.pkey")
+      .whenMatchedUpdateAll()
+      .whenNotMatchedInsertAll()
+      .execute(t)
+
+  private def upserted(t: ManagedTable, ranges: Seq[Range], keys: Seq[Int]): Unit = {
+    val old = ranges.flatten.map(i => i -> Seq(s"v$i")).toMap
+    assert(contents(t) == old ++ keys.map(i => i -> Seq(s"u$i")))
+  }
+
   test("a full-rewrite merge of a pk-sorted table writes files whose pk " +
        "bounds stay disjoint") {
-    def rows(r: Range) = df(schema, r.map(i => Row(i, s"v$i"))).coalesce(1)
-    val t = ManagedTable.create(rows(1 to 25), tmpDir("rewritelayout"))
-    Seq(26 to 50, 51 to 75, 76 to 100).foreach(r => t.append(rows(r)))
+    val ranges = Seq(1 to 25, 26 to 50, 51 to 75, 76 to 100)
+    val t = filesOver("rewritelayout", ranges: _*)
     // one key in every file: pruning removes nothing, the merge rewrites
     // the whole snapshot through the outer join
+    val keys = Seq(10, 30, 60, 90, 101, 102)
     val b = Merge.into(t.toDF, "base")
-      .using(df(schema, Seq(10, 30, 60, 90, 101, 102).map(i => Row(i, s"u$i"))),
-        "src", "base.pkey = src.pkey")
+      .using(df(schema, keys.map(i => Row(i, s"u$i"))), "src", "base.pkey = src.pkey")
       .whenMatchedUpdateAll()
       .whenNotMatchedInsertAll()
     assert(b.filePrunePlan(t.latestEntry) == Merge.FilePrune.Fallback)
-    // keep every shuffle partition its own file, as at a scale where
-    // each partition fills the advisory size
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try b.execute(t)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    val bounds = t.fileStats
-      .map(f => (f.min("pkey").toInt, f.max("pkey").toInt)).sortBy(_._1)
-    assert(bounds.size > 1, s"expected several files, got $bounds")
-    assert(bounds.zip(bounds.tail).forall { case ((_, hi), (lo, _)) => hi < lo },
-      s"rewritten files overlap on pkey: $bounds")
-    val expected = (1 to 100).map(i =>
-      i -> Seq(if (Set(10, 30, 60, 90)(i)) s"u$i" else s"v$i")).toMap +
-      (101 -> Seq("u101")) + (102 -> Seq("u102"))
-    assert(contents(t) == expected)
+    b.execute(t)
+    assert(pkBounds(t) == Seq((1, 25), (26, 50), (51, 75), (76, 102)))
+    upserted(t, ranges, keys)
+  }
+
+  test("a pruned merge over k disjoint touched files writes exactly k " +
+       "files, each over its replaced file's range or extending it") {
+    val ranges = Seq(1 to 10, 21 to 30, 41 to 50, 61 to 70, 81 to 90)
+    val t = filesOver("layoutk", ranges: _*)
+    val kept = t.fileStats.filter(f => Set(1, 41, 81)(f.min("pkey").toInt))
+      .map(_.path).toSet
+    // 25 and 65 touch two files; the inserts 35 and 75 extend them
+    // upwards, and 58 extends 61-70 downwards: 21-30 would have to
+    // stretch over the kept 41-50 to take it
+    val keys = Seq(25, 35, 58, 65, 75)
+    upsert(t, keys)
+    assert(kept.subsetOf(t.fileStats.map(_.path).toSet))
+    assert(pkBounds(t) == Seq((1, 10), (21, 35), (41, 50), (58, 75), (81, 90)))
+    upserted(t, ranges, keys)
+  }
+
+  test("a pruned merge gives an inserted key that no touched file can take " +
+       "without crossing a kept file a file of its own") {
+    val ranges = Seq(1 to 10, 21 to 30, 41 to 50)
+    val t = filesOver("layoutorphan", ranges: _*)
+    // 15 extends the touched 21-30 downwards; 95 lies beyond the kept 41-50
+    val keys = Seq(15, 25, 95)
+    upsert(t, keys)
+    assert(pkBounds(t) == Seq((1, 10), (15, 30), (41, 50), (95, 95)))
+    upserted(t, ranges, keys)
+  }
+
+  test("overlapping touched files keep the range layout, which costs the " +
+       "sample job the layout-keeping write does not run") {
+    val disjoint = filesOver("jobsdisjoint", 1 to 20, 21 to 40, 41 to 60)
+    val overlapping = filesOver("jobsoverlap", 1 to 20, 15 to 40, 41 to 60)
+    // keys 5 and 25 touch the first two files of either table
+    val layoutJobs = countJobs(upsert(disjoint, Seq(5, 25)))
+    val rangeJobs = countJobs(upsert(overlapping, Seq(5, 25)))
+    info(s"pruned merge: $layoutJobs jobs keeping the layout, $rangeJobs " +
+      "range-partitioning")
+    assert(layoutJobs == rangeJobs - 1)
+    assertDisjoint(pkBounds(disjoint))
+    assertDisjoint(pkBounds(overlapping))
+    upserted(disjoint, Seq(1 to 60), Seq(5, 25))
+    assert(contents(overlapping) == (1 to 60).map(i =>
+      i -> (if (i == 5) Seq("u5") else if (i == 25) Seq("u25")
+            else if (i >= 15 && i <= 20) Seq(s"v$i", s"v$i") else Seq(s"v$i"))).toMap)
   }
 
   test("executeStaged refuses a transaction marker, schema evolution or a " +
