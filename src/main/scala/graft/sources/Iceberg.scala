@@ -1147,10 +1147,8 @@ object Iceberg {
       val posDel = table.currentDvRows
         .join(broadcast(mapDf), Seq("path"))
         .select(col("__uri").as("file_path"), col("pos")).persist()
-      // manifest record_count = the rows actually in the delete file —
-      // counted from the frame, NOT summed from FileStat.dvRows, which
-      // is None on legacy log entries predating the field (numRowsAt
-      // re-reads the sidecar for exactly that case) and would undercount
+      // manifest record_count = the rows actually in the delete file,
+      // counted from the frame it is written from
       val delCount = posDel.count()
       val nShards = graft.tables.ManagedTable.dvShardCount(spark, delCount)
       val sorted = posDel

@@ -39,15 +39,17 @@ final case class FileStat(path: String, rows: Long, bytes: Long,
                           min: Map[String, String], max: Map[String, String],
                           dv: Option[String] = None,
                           /** rows of `dv` masking THIS file (recorded at
-                            * DML/adoption time) — `rows - dvRows` is the
-                            * file's live count, summing to a
-                            * metadata-only `numRows`. None on entries
-                            * predating the field: live counts then need
-                            * one sidecar read.
+                            * DML/adoption time); defined exactly when
+                            * `dv` is.
                             */
                           dvRows: Option[Long] = None) {
   /** The leaf directory (snapshot-dir entry) this file lives in. */
   def leafDir: String = path.substring(0, path.lastIndexOf('/'))
+
+  /** Rows a scan of this file returns: footer rows minus the rows its
+    * deletion vector masks — summing to a metadata-only `numRows`.
+    */
+  def liveRows: Long = rows - dvRows.getOrElse(0L)
 }
 
 object FileStats {

@@ -18,7 +18,7 @@ import scala.jdk.CollectionConverters._
   *    an append rewrites its data only when the schema or layout moved.
   *  - '''FailIfMoved''' (`overwrite` and the full-rewrite MERGE,
   *    `setProperties`, `unsetProperties`, `dropColumn`, `setNotNull`,
-  *    `dropNotNull`, `restore`, `fsck`, OPTIMIZE of a pre-stats table):
+  *    `dropNotNull`, `restore`, `fsck`):
   *    the commit read the snapshot as a whole, so ANY intervening commit
   *    raises.
   *  - '''Rebase''' (read-modify-write commits over part of the table):
@@ -46,17 +46,17 @@ final class ConcurrentCommitException(msg: String) extends IllegalStateException
   * }}}
   *
   * Each log entry records the complete current snapshot as a list of
-  * LEAF data directories — for partitioned tables one entry per partition
-  * directory — plus the schema, partition columns, and properties. Leaf
-  * granularity is what makes partition-scoped rewrites possible: a MERGE
-  * that only touches `p=3` commits a snapshot that keeps every other
-  * partition's existing leaf dirs verbatim (see [[overwritePartitions]]).
+  * data files with their footer stats (see [[FileStat]]), plus the
+  * schema, partition columns, and properties. File granularity is what
+  * makes partial rewrites possible: a MERGE that only touches `p=3`
+  * commits a snapshot that keeps every other partition's files verbatim
+  * (see [[overwritePartitions]]).
   *
   * Commits are atomic: data is fully written under a fresh UUID directory
   * first, then the log entry is linked into place with put-if-absent
   * semantics. Readers resolve the latest vN.json and read exactly the
-  * directories it lists, so concurrent readers never observe a
-  * half-written commit.
+  * files it lists, so concurrent readers never observe a half-written
+  * commit.
   *
   * Scale note: on a real cluster this maps to object-store put-if-absent
   * on the log key (the same protocol Delta/Iceberg use); the data path is
@@ -246,7 +246,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
             s"vacuumed deletion vector ($r)")
       }
     transact(s"RESTORE v$version", FailIfMoved()) { _ =>
-      Some(Actions(src.dirs, src.files,
+      Some(Actions(src.files,
         metrics = Map("numRestoredFiles" -> src.files.size.toString),
         schema = Some(src.schema)))
     }
@@ -266,40 +266,9 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     if (ManagedTable.hasFieldIds(schema))
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
 
-  private[tables] def snapshotDF(e: LogEntry): DataFrame = {
-    ensureFieldIdRead(e.schema)
-    if (e.files.nonEmpty) readFilesDF(e.files, e.schema, e.version)
-    else if (e.dirs.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], e.schema)
-    } else {
-      e.dirs.find(d => !Files.isDirectory(dataDir.resolve(d))).foreach { d =>
-        throw new IllegalStateException(
-          s"Version ${e.version} of $location references vacuumed data ($d); " +
-            "time travel is limited to the vacuum retention window")
-      }
-      // One scan per commit uuid: leaf dirs are grouped so the reader's
-      // basePath sits directly above the partition directories and Spark
-      // re-derives the partition columns (and prunes on them) from the
-      // k=v path segments.
-      val frames = e.dirs.groupBy(_.takeWhile(_ != '/')).toSeq.map {
-        case (uuid, leaves) =>
-          spark.read
-            .schema(e.schema) // from the log — no footer inference (see
-                              // readFilesFiltered)
-            .option("basePath", dataDir.resolve(uuid).toString)
-            .parquet(leaves.map(l => dataDir.resolve(l).toString): _*)
-      }
-      project(frames.reduce(_.unionByName(_, allowMissingColumns = true)), e.schema)
-    }
-  }
+  private[tables] def snapshotDF(e: LogEntry): DataFrame =
+    readFilesDF(e.files, e.schema, e.version)
 
-  /** Read exactly `files` (same uuid-grouped basePath trick as the dir
-    * path, so partition columns still derive from `k=v` segments),
-    * with each file's deletion vector applied (rows whose (file,
-    * position) appear in the file's DV are filtered out — Delta's
-    * merge-on-read DELETE). Tables without DVs take the plain path:
-    * no metadata columns, no join, zero overhead.
-    */
   /** The file-level delta of one commit vs its predecessor, keyed by
     * (path, deletion-vector id) — the structural classification the
     * streaming table source tails by: a commit that removes nothing is
@@ -337,6 +306,11 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
                                      v: Long): DataFrame =
     readFilesDF(added, schema, v)
 
+  /** Read exactly `files`, each with its deletion vector applied (rows
+    * whose (file, position) appear in the file's DV are filtered out —
+    * Delta's merge-on-read DELETE). Tables without DVs take the plain
+    * path: no metadata columns, no join, zero overhead.
+    */
   private def readFilesDF(files: Seq[FileStat], schema: StructType,
                           version: Long): DataFrame =
     project(readFilesFiltered(files, schema, version, withPos = false), schema)
@@ -404,7 +378,8 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     // exactly what the mergeSchema union produced. Partition columns in
     // the schema resolve from the `k=v` path segments as before (a
     // user-specified schema naming a partition column takes its values
-    // from the path).
+    // from the path). One scan per commit uuid, whose dir is the
+    // basePath the `k=v` segments hang off.
     val frames = files.groupBy(_.path.takeWhile(_ != '/')).toSeq.map {
       case (uuid, fs) =>
         val r = spark.read
@@ -464,14 +439,12 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     */
   def toDFWhere(predicateSql: String): DataFrame = {
     val e = latestEntry
-    val filtered = expr(predicateSql)
-    if (e.files.isEmpty) return snapshotDF(e).filter(filtered)
     val parsed = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
       .parseExpression(predicateSql)
     val kept = BloomSkip.prune(spark.sessionState.newHadoopConf(), dataDir,
       FileStats.prune(e.files, e.schema, parsed), e.schema, parsed,
       e.properties)
-    readFilesDF(kept, e.schema, e.version).filter(filtered)
+    readFilesDF(kept, e.schema, e.version).filter(expr(predicateSql))
   }
 
   def schema: StructType = latestEntry.schema
@@ -488,15 +461,9 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
 
   /** The current snapshot's per-file stats — the file-granular view
     * interop EXPORTERS need (paths data-dir-relative; rows/bytes from
-    * footer stats). Stats-bearing snapshots only, like [[exportDelta]].
+    * footer stats).
     */
-  private[graft] def currentFileStats: Seq[FileStat] = {
-    val e = latestEntry
-    require(e.files.nonEmpty || e.dirs.isEmpty,
-      s"export requires a stats-bearing snapshot at $location " +
-        s"(version ${e.version} tracks directories, not files)")
-    e.files
-  }
+  private[graft] def currentFileStats: Seq[FileStat] = latestEntry.files
 
   /** Absolute filesystem path of a snapshot-relative data file. */
   private[graft] def dataFilePath(rel: String): Path = dataDir.resolve(rel)
@@ -523,6 +490,9 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
 
   /** A file's hive `k=v` partition values decoded to raw strings
     * (null = default partition) — empty for an unpartitioned file.
+    * FileStats.unescapePath is the exact inverse of Spark's
+    * escapePathName; URLDecoder is NOT (it would turn a literal '+' —
+    * unescaped by Spark — into a space).
     */
   private[graft] def hivePartitionValues(f: FileStat): Seq[(String, String)] = {
     val leaf = ManagedTable.leafSuffix(f.leafDir)
@@ -542,90 +512,30 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     */
   def detail: TableDetail = {
     val e = latestEntry
-    if (e.files.nonEmpty)
-      return TableDetail(location, e.partitionColumns, e.properties,
-        e.files.size.toLong, e.files.map(_.bytes).sum)
-    var n = 0L
-    var bytes = 0L
-    e.dirs.foreach { d =>
-      val p = dataDir.resolve(d)
-      if (Files.isDirectory(p)) {
-        val s = Files.walk(p)
-        try s.iterator().asScala.foreach { f =>
-          val name = f.getFileName.toString
-          if (Files.isRegularFile(f) && name.endsWith(".parquet")) {
-            n += 1; bytes += Files.size(f)
-          }
-        }
-        finally s.close()
-      }
-    }
-    TableDetail(location, e.partitionColumns, e.properties, n, bytes)
+    TableDetail(location, e.partitionColumns, e.properties,
+      e.files.size.toLong, e.files.map(_.bytes).sum)
   }
 
-  /** Row count of the current snapshot from METADATA alone: the log's
-    * per-file footer counts minus recorded deletion-vector
-    * cardinalities. O(files) driver arithmetic, zero data scan — the
-    * 100 TB `count(*)` answers in milliseconds, the same way Delta
-    * answers it from `add.stats.numRecords`. Snapshots whose DV entries
-    * predate the `dvRows` field pay one small sidecar read; legacy
-    * pre-stats tables fall back to a scan (upgraded on their next
-    * write).
+  /** Row count of the current snapshot from METADATA alone: the sum of
+    * the log's per-file live counts ([[FileStat.liveRows]]: footer rows
+    * minus the recorded deletion-vector cardinality). O(files) driver
+    * arithmetic, zero data scan — the 100 TB `count(*)` answers in
+    * milliseconds, the same way Delta answers it from
+    * `add.stats.numRecords`.
     */
-  def numRows: Long = numRowsAt(latestEntry)
+  def numRows: Long = latestEntry.files.map(_.liveRows).sum
 
-  private[tables] def numRowsAt(e: LogEntry): Long = {
-    if (e.files.isEmpty) return snapshotDF(e).count()
-    val missing = e.files.filter(f => f.dv.isDefined && f.dvRows.isEmpty)
-    val fallback: Map[String, Long] =
-      if (missing.isEmpty) Map.empty
-      else spark.read.schema(ManagedTable.dvSchema)
-        .parquet(missing.map(f => dvRoot.resolve(f.dv.get).toString)
-          .distinct: _*)
-        .filter(col("path").isInCollection(missing.map(_.path)))
-        .groupBy("path").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    e.files.map(f => f.rows - f.dvRows.getOrElse(
-      if (f.dv.isDefined) fallback.getOrElse(f.path, 0L) else 0L)).sum
-  }
-
-  /** Live row count PER PARTITION from metadata alone (log footer counts
-    * minus recorded DV cardinalities — same accounting as [[numRows]],
-    * grouped by the file's `k=v` partition path). Zero data scan: the
-    * balance probe behind maintenance decisions (skewed partitions →
-    * re-cluster; an IVF index's drifted cells → refit) answers from the
-    * log in O(files) driver arithmetic. Keys are the decoded partition
-    * values in `partitionColumns` order; an unpartitioned table returns
-    * one entry with an empty key. Files whose DV predates the dvRows
-    * field pay one sidecar read (the [[numRows]] fallback).
+  /** Live row count PER PARTITION from metadata alone: the [[numRows]]
+    * accounting grouped by the file's decoded `k=v` partition values
+    * ([[hivePartitionValues]], in `partitionColumns` order). Zero data
+    * scan: the balance probe behind maintenance decisions (skewed
+    * partitions → re-cluster; an IVF index's drifted cells → refit)
+    * answers from the log in O(files) driver arithmetic. An unpartitioned
+    * table returns one entry with an empty key.
     */
-  def partitionRowCounts: Map[Seq[(String, String)], Long] = {
-    val e = latestEntry
-    val missing = e.files.filter(f => f.dv.isDefined && f.dvRows.isEmpty)
-    val fallback: Map[String, Long] =
-      if (missing.isEmpty) Map.empty
-      else spark.read.schema(ManagedTable.dvSchema)
-        .parquet(missing.map(f => dvRoot.resolve(f.dv.get).toString)
-          .distinct: _*)
-        .filter(col("path").isInCollection(missing.map(_.path)))
-        .groupBy("path").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    e.files.groupBy { f =>
-      val leaf = ManagedTable.leafSuffix(f.leafDir)
-      if (leaf.isEmpty) Seq.empty[(String, String)]
-      else leaf.split('/').filter(_.nonEmpty).toSeq.map { seg =>
-        val i = seg.indexOf('=')
-        require(i > 0, s"non-hive partition segment in $leaf")
-        val raw = seg.substring(i + 1)
-        seg.substring(0, i) ->
-          (if (raw == "__HIVE_DEFAULT_PARTITION__") null
-           else FileStats.unescapePath(raw))
-      }
-    }.map { case (k, fs) =>
-      k -> fs.map(f => f.rows - f.dvRows.getOrElse(
-        if (f.dv.isDefined) fallback.getOrElse(f.path, 0L) else 0L)).sum
-    }
-  }
+  def partitionRowCounts: Map[Seq[(String, String)], Long] =
+    latestEntry.files.groupBy(hivePartitionValues)
+      .map { case (k, fs) => k -> fs.map(_.liveRows).sum }
 
   /** history() analog (mack/__init__.py:626): one row per committed
     * version. Reads the compact checkpoint for everything it covers and
@@ -684,14 +594,6 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     */
   private def statsFor(leaves: Seq[String], schema: StructType): Seq[FileStat] =
     FileStats.collect(spark.sessionState.newHadoopConf(), dataDir, leaves, schema)
-
-  /** The entry's per-file stats, backfilled from its leaf dirs when the
-    * entry predates stats collection (one footer pass upgrades a legacy
-    * table the first time it is written to).
-    */
-  private def entryFiles(e: LogEntry): Seq[FileStat] =
-    if (e.files.nonEmpty || e.dirs.isEmpty) e.files
-    else statsFor(e.dirs, e.schema)
 
   /** Per-row CHECK-constraint enforcement (Delta's `CheckInvariant`):
     * every write funnels through [[writeData]], so a violating row makes
@@ -906,7 +808,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
           d
       }
       val newStats = statsFor(dirs, newSchema)
-      Some(Actions(e.dirs ++ dirs, entryFiles(e) ++ newStats,
+      Some(Actions(e.files ++ newStats,
         ManagedTable.writeMetrics(newStats), schema = Some(newSchema)))
     }
   }
@@ -942,10 +844,8 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       val dirs = writeData(aligned, e.partitionColumns, e.properties,
         tableSchema = e.schema)
       val newStats = statsFor(dirs, e.schema)
-      // a legacy entry (dirs without a file list) cannot count its files
-      val removed = Option.when(e.files.nonEmpty || e.dirs.isEmpty)(
-        "numRemovedFiles" -> e.files.size.toString)
-      Some(Actions(dirs, newStats, ManagedTable.writeMetrics(newStats) ++ removed, cdc))
+      Some(Actions(newStats, ManagedTable.writeMetrics(newStats) +
+        ("numRemovedFiles" -> e.files.size.toString), cdc))
     }
 
   // ---- the commit protocol ---------------------------------------------
@@ -1013,7 +913,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
           val props = a.properties.getOrElse(cur.properties)
           try {
             commit(LogEntry(cur.version + 1, System.currentTimeMillis(),
-              operation, a.dirs, a.schema.getOrElse(cur.schema),
+              operation, a.schema.getOrElse(cur.schema),
               cur.partitionColumns,
               txn.fold(props) { case (app, v) =>
                 props + (ManagedTable.txnPropKey(app) -> v.toString)
@@ -1046,10 +946,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       // a concurrent MERGE or DV commit silently resurrect the DV-deleted
       // rows.
       val (added, removed) = fileDiff(e, p)
-      val dirsE = e.dirs.toSet
-      val dirsP = p.dirs.toSet
-      val touched = ((dirsE diff dirsP) ++ (dirsP diff dirsE) ++
-        (added ++ removed).map(_.leafDir)).map(ManagedTable.leafSuffix)
+      val touched = (added ++ removed).map(f => ManagedTable.leafSuffix(f.leafDir)).toSet
       Some(CommitDelta(touched, removed.map(_.path).toSet, added))
     } catch { case _: IllegalStateException => None }
 
@@ -1116,12 +1013,10 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
         "it touched partition(s) " + overlap.take(3).mkString(", "))
     }
     transact(operation, Rebase(base, partitionRule), txn) { cur =>
-      // disjoint: keep the intervening commits' dirs/properties, swap
-      // only the replaced partitions' leaves for ours
-      val kept = cur.dirs.filterNot(d => affected(leafSuffix(d)))
-      val keptSet = kept.toSet
-      Some(Actions(kept ++ newLeaves,
-        entryFiles(cur).filter(f => keptSet(f.leafDir)) ++ newStats,
+      // disjoint: keep the intervening commits' files/properties, swap
+      // only the replaced partitions' files for ours
+      Some(Actions(
+        cur.files.filterNot(f => affected(leafSuffix(f.leafDir))) ++ newStats,
         ManagedTable.writeMetrics(newStats) +
           ("numReplacedPartitions" -> affected.size.toString),
         cdc))
@@ -1153,28 +1048,23 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
                                    cdc: Seq[String] = Nil,
                                    txn: Option[(String, Long)] = None,
                                    alreadyOrdered: Boolean = false): Unit = {
-    require(base.files.nonEmpty, "replaceFiles requires a stats-bearing snapshot")
-    lazy val newDirs = {
+    lazy val newStats = {
       val aligned = df.select(base.schema.fields.map { f =>
         col(f.name).cast(f.dataType).as(f.name)
       }.toIndexedSeq: _*)
-      writeData(aligned, base.partitionColumns, base.properties,
-        alreadyOrdered = alreadyOrdered, tableSchema = base.schema)
+      statsFor(writeData(aligned, base.partitionColumns, base.properties,
+        alreadyOrdered = alreadyOrdered, tableSchema = base.schema), base.schema)
     }
-    lazy val newStats = statsFor(newDirs, base.schema)
     transact(operation, Rebase(base, fileRule(removed, addedMayMatch)), txn) { cur =>
       val kept = cur.files.filterNot(f => removed(f.path))
-      Some(Actions((kept.map(_.leafDir).distinct ++ newDirs).distinct,
-        kept ++ newStats,
+      Some(Actions(kept ++ newStats,
         ManagedTable.writeMetrics(newStats) +
           ("numRemovedFiles" -> removed.size.toString) ++ extraMetrics,
         cdc))
     }
   }
 
-  /** The current snapshot's per-file stats (empty on a legacy table that
-    * has not been written to since stats were introduced).
-    */
+  /** The current snapshot's per-file stats: its complete file list. */
   private[tables] def fileStats: Seq[FileStat] = latestEntry.files
 
   /** A DataFrame over exactly `files` of the current snapshot. */
@@ -1270,12 +1160,9 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     val retained: Set[String] = retainedEntries.flatMap(_.dirs).toSet
     // file-granular retention: the union of per-file snapshots lets a
     // still-referenced commit dir shed files replaced by a file-pruned
-    // MERGE. A retained entry WITHOUT a file list needs its dirs whole.
+    // MERGE
     val retainedFilePaths: Set[String] =
       retainedEntries.flatMap(_.files.map(_.path)).toSet
-    val wholeDirUuids: Set[String] = retainedEntries
-      .filter(en => en.files.isEmpty && en.dirs.nonEmpty)
-      .flatMap(_.dirs.map(_.takeWhile(_ != '/'))).toSet
     var dirsDeleted = 0L
     var bytesFreed = 0L
     def sizeOf(p: Path): Long = {
@@ -1324,19 +1211,17 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
           // file-granular pass: parquet files listed by NO retained
           // snapshot (replaced by a file-pruned MERGE) are reclaimed even
           // though their commit dir stays referenced
-          if (!wholeDirUuids.contains(uuid)) {
-            val s = Files.walk(top)
-            val parquets =
-              try s.iterator().asScala.toSeq.filter(f =>
-                Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
-              finally s.close()
-            parquets.foreach { f =>
-              val rel = uuid + "/" + top.relativize(f).toString
-              if (!retainedFilePaths.contains(rel) &&
-                  Files.getLastModifiedTime(f).toMillis <= ageCutoff) {
-                bytesFreed += Files.size(f); dirsDeleted += 1
-                if (!dryRun) Files.delete(f)
-              }
+          val s = Files.walk(top)
+          val parquets =
+            try s.iterator().asScala.toSeq.filter(f =>
+              Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
+            finally s.close()
+          parquets.foreach { f =>
+            val rel = uuid + "/" + top.relativize(f).toString
+            if (!retainedFilePaths.contains(rel) &&
+                Files.getLastModifiedTime(f).toMillis <= ageCutoff) {
+              bytesFreed += Files.size(f); dirsDeleted += 1
+              if (!dryRun) Files.delete(f)
             }
           }
         }
@@ -1435,16 +1320,13 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
         val segs = ManagedTable.leafSuffix(f.leafDir).split("/").toSet
         specSegs.exists(_.subsetOf(segs))
       }
-    require(partitions.isEmpty || e.files.nonEmpty,
-      "partition-scoped OPTIMIZE needs per-file stats (legacy snapshot " +
-        "without a file list — run a full OPTIMIZE first)")
     // Pure compaction is INCREMENTAL (Delta's bin-packing OPTIMIZE):
     // only files below the size target are rewritten; right-sized files
     // stay verbatim in the snapshot. On a 100 TB table that has been
     // compacted before, an OPTIMIZE after a day of small appends
     // rewrites the day's files, not the table. sortBy rewrites only the
     // files out of place ([[optimizeRuns]]); zorderBy stays global.
-    if (sortBy.isEmpty && zorderBy.isEmpty && e.files.nonEmpty) {
+    if (sortBy.isEmpty && zorderBy.isEmpty) {
       // dv-bearing files join the compaction set REGARDLESS of size:
       // rewriting them through the masked read materializes their
       // deletion vectors, so OPTIMIZE is always a working
@@ -1466,7 +1348,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     }
     // sortBy on an unpartitioned table is incremental too when every file
     // has bounds on the leading sort column: only files out of place move
-    if (sortBy.nonEmpty && e.partitionColumns.isEmpty && e.files.nonEmpty)
+    if (sortBy.nonEmpty && e.partitionColumns.isEmpty)
       FileStats.keyRanges(e.files, e.schema, sortBy.head) match {
         case Some(ranges) =>
           optimizeRuns(e, ranges, targetFileSizeBytes, sortBy)
@@ -1474,15 +1356,10 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
         case None => // a file without bounds: re-sort the whole snapshot
       }
     val scopeFiles = e.files.filter(inScope)
-    if (partitions.nonEmpty && scopeFiles.isEmpty) return // nothing matches
-    val baseBytes =
-      if (scopeFiles.nonEmpty) scopeFiles.map(_.bytes).sum
-      else detail.sizeInBytes
+    if (scopeFiles.forall(_.rows == 0)) return // no rows to re-cluster, no commit
     val numFiles = math.max(1,
-      math.ceil(baseBytes.toDouble / targetFileSizeBytes).toInt)
-    val df =
-      if (partitions.isEmpty) snapshotDF(e)
-      else readFilesDF(scopeFiles, e.schema, e.version)
+      math.ceil(scopeFiles.map(_.bytes).sum.toDouble / targetFileSizeBytes).toInt)
+    val df = readFilesDF(scopeFiles, e.schema, e.version)
     val ordered =
       if (zorderBy.nonEmpty) {
         // Z-ORDER rewrite (Delta OPTIMIZE ZORDER analog): range-shuffle +
@@ -1521,23 +1398,14 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
         if (sortBy.isEmpty) compacted
         else compacted.sortWithinPartitions(sortBy.map(col): _*)
       }
-    if (e.files.nonEmpty)
-      // compaction changes no rows, so concurrent appends commute
-      // (addedMayMatch = never): the rebase keeps their files alongside
-      // the compacted rewrite. Concurrent removals of a compacted file
-      // (MERGE/DELETE) still raise inside replaceFiles. Scoped runs
-      // replace only the in-scope files; out-of-scope files stay verbatim.
-      replaceFiles(scopeFiles.map(_.path).toSet, ordered,
-        operation = "OPTIMIZE", base = e, addedMayMatch = _ => false,
-        alreadyOrdered = true)
-    else
-      // a pre-stats snapshot has no file list to rebase over
-      transact("OPTIMIZE", FailIfMoved(e.version)) { _ =>
-        val dirs = writeData(ordered, e.partitionColumns, e.properties,
-          alreadyOrdered = true, tableSchema = e.schema)
-        val newStats = statsFor(dirs, e.schema)
-        Some(Actions(dirs, newStats, ManagedTable.writeMetrics(newStats)))
-      }
+    // compaction changes no rows, so concurrent appends commute
+    // (addedMayMatch = never): the rebase keeps their files alongside
+    // the compacted rewrite. Concurrent removals of a compacted file
+    // (MERGE/DELETE) still raise inside replaceFiles. Scoped runs
+    // replace only the in-scope files; out-of-scope files stay verbatim.
+    replaceFiles(scopeFiles.map(_.path).toSet, ordered,
+      operation = "OPTIMIZE", base = e, addedMayMatch = _ => false,
+      alreadyOrdered = true)
   }
 
   /** The incremental sortBy OPTIMIZE of an unpartitioned table (Delta's
@@ -1577,7 +1445,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     val dense = e.files.maxBy(_.rows)
     val bytesPerRow = dense.bytes.toDouble / math.max(1L, dense.rows)
     def numFiles(run: Seq[FileStat]): Int = {
-      val live = run.map(f => f.rows - f.dvRows.getOrElse(0L)).sum
+      val live = run.map(_.liveRows).sum
       val bytes = math.min(run.map(_.bytes).sum.toDouble, live * bytesPerRow)
       math.max(1, math.round(bytes / target).toInt)
     }
@@ -1657,7 +1525,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     val frames = ((fromVersion + 1) to to).flatMap { v =>
       val e = readEntry(v)
       lazy val p =
-        if (v == 0) e.copy(dirs = Nil, files = Nil) // before v0: empty table
+        if (v == 0) e.copy(files = Nil) // before v0: empty table
         else readEntry(v - 1)
       // at-commit sidecar: the net change rows, already labeled — read
       // them back with the commit's schema (explicit, so an empty
@@ -1696,10 +1564,6 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       if (e.operation == "OPTIMIZE") Nil // rewrite-only: no data change
       else if ((net && useSidecar || dvOnly) && e.cdc.nonEmpty) sidecarFrames
       else {
-        if (e.files.isEmpty && e.dirs.nonEmpty || p.files.isEmpty && p.dirs.nonEmpty)
-          throw new IllegalStateException(
-            s"changes at $location requires stats-bearing snapshots; " +
-              s"version ${if (e.files.isEmpty) v else v - 1} predates file stats")
         val pf = p.files.map(f => f.path -> f).toMap
         val ef = e.files.map(f => f.path -> f).toMap
         val added = (ef.keySet diff pf.keySet).toSeq.sorted.map(ef)
@@ -1778,7 +1642,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     val parsed = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
       .parseExpression(conditionSql)
     val base = latestEntry
-    if (dvEnabled(base) && base.files.nonEmpty)
+    if (dvEnabled(base))
       return dvDml("DELETE", parsed,
         matchedOf = df => df.filter(coalesce(cond, lit(false))),
         changesOf = m => m.withColumn("_change_type", lit("delete")),
@@ -1854,9 +1718,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       // [[ManagedTable.dvShardKeys]]: a bulk DELETE must not serialize
       // O(deleted rows) through one task, even when the whole mask
       // lands in ONE large data file. Prior mass is known from the
-      // touched files' dvRows (legacy entries without the field just
-      // undercount the estimate, which only makes shards larger,
-      // never wrong).
+      // touched files' dvRows.
       val mask =
         prior.unionByName(matched.select(col(FP).as("path"), col(POS).as("pos")))
       val nShards = ManagedTable.dvShardCount(
@@ -1889,7 +1751,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
             f.copy(dv = Some(dvId), dvRows = Some(
               dvRowsByPath.getOrElse(f.path, 0L)))
           else f) ++ newStats
-        Some(Actions((cur.dirs ++ newStats.map(_.leafDir)).distinct, newFiles,
+        Some(Actions(newFiles,
           ManagedTable.writeMetrics(newStats) ++ Map(
             (if (op == "DELETE") "numDeletedRows" else "numUpdatedRows")
               -> n.toString,
@@ -1918,7 +1780,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     val parsed = conditionSql.map(
       org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression)
     val base = latestEntry
-    if (dvEnabled(base) && base.files.nonEmpty) {
+    if (dvEnabled(base)) {
       // merge-on-read UPDATE: vector out the matched positions, append
       // their post-images as fresh files — O(matched), no file rewrite
       def applySet(df: DataFrame): DataFrame =
@@ -2024,44 +1886,31 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
                          rewriteOf: DataFrame => DataFrame,
                          changesOf: DataFrame => DataFrame): Long = {
     val base = latestEntry
-    def writeCdc(candidates: DataFrame): Seq[String] =
-      if (!cdfEnabled(base)) Nil
-      else writeCdcSidecar(changesOf(candidates), base.schema)
-    if (base.files.nonEmpty) {
-      val touched = parsed.fold(base.files)(p =>
-        BloomSkip.prune(spark.sessionState.newHadoopConf(), dataDir,
-          FileStats.prune(base.files, base.schema, p), base.schema, p,
-          base.properties))
-      if (touched.isEmpty) return 0L // bounds/blooms prove nothing matches
-      val candidates = scanFilesDF(touched, base)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val matched = matchedOf(candidates).count()
-        if (matched == 0) return 0L // no commit, no version burned
-        // Delta's ConcurrentAppendException rule: a concurrently-added
-        // file conflicts only if this DML would have read it — i.e. its
-        // bounds survive the same pruning predicate.
-        replaceFiles(touched.map(_.path).toSet, rewriteOf(candidates),
-          operation = op, base = base,
-          addedMayMatch = added => parsed.fold(true)(p =>
-            FileStats.prune(added, base.schema, p).nonEmpty),
-          extraMetrics = Map(
-            (if (op == "DELETE") "numDeletedRows" else "numUpdatedRows")
-              -> matched.toString),
-          cdc = writeCdc(candidates))
-        matched
-      } finally { candidates.unpersist(); () }
-    } else {
-      // legacy (pre-stats) snapshot: full read-modify-write
-      val df = snapshotDF(base)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val matched = matchedOf(df).count()
-        if (matched == 0) return 0L
-        overwriteFrom(base.version, rewriteOf(df), op, cdc = writeCdc(df))
-        matched
-      } finally { df.unpersist(); () }
-    }
+    val touched = parsed.fold(base.files)(p =>
+      BloomSkip.prune(spark.sessionState.newHadoopConf(), dataDir,
+        FileStats.prune(base.files, base.schema, p), base.schema, p,
+        base.properties))
+    if (touched.isEmpty) return 0L // bounds/blooms prove nothing matches
+    val candidates = scanFilesDF(touched, base)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val matched = matchedOf(candidates).count()
+      if (matched == 0) return 0L // no commit, no version burned
+      // Delta's ConcurrentAppendException rule: a concurrently-added
+      // file conflicts only if this DML would have read it — i.e. its
+      // bounds survive the same pruning predicate.
+      replaceFiles(touched.map(_.path).toSet, rewriteOf(candidates),
+        operation = op, base = base,
+        addedMayMatch = added => parsed.fold(true)(p =>
+          FileStats.prune(added, base.schema, p).nonEmpty),
+        extraMetrics = Map(
+          (if (op == "DELETE") "numDeletedRows" else "numUpdatedRows")
+            -> matched.toString),
+        cdc =
+          if (cdfEnabled(base)) writeCdcSidecar(changesOf(candidates), base.schema)
+          else Nil)
+      matched
+    } finally { candidates.unpersist(); () }
   }
 
   /** ALTER TABLE ADD COLUMNS analog: widen the schema by `fields`
@@ -2081,14 +1930,14 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       else {
         ManagedTable.guardResurrect(e,
           newSchema.fieldNames.filterNot(e.schema.fieldNames.contains))
-        Some(Actions(e.dirs, e.files, schema = Some(newSchema)))
+        Some(Actions(e.files, schema = Some(newSchema)))
       }
     }
   }
 
   def setProperties(props: Map[String, String]): Unit =
     transact("SET TBLPROPERTIES", FailIfMoved()) { e =>
-      Some(Actions(e.dirs, e.files, properties = Some(e.properties ++ props)))
+      Some(Actions(e.files, properties = Some(e.properties ++ props)))
     }
 
   /** Drop table properties by key (absent keys are a no-op, as in
@@ -2097,7 +1946,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
   def unsetProperties(keys: Seq[String]): Unit =
     transact("UNSET TBLPROPERTIES", FailIfMoved()) { e =>
       Option.when(keys.exists(e.properties.contains))(
-        Actions(e.dirs, e.files, properties = Some(e.properties -- keys)))
+        Actions(e.files, properties = Some(e.properties -- keys)))
     }
 
   /** Logical ALTER TABLE DROP COLUMN: a schema-only commit — data files
@@ -2134,7 +1983,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
         }
       val dropped = (e.properties.get(ManagedTable.droppedColsKey)
         .map(_.split(",").toSeq).getOrElse(Nil) :+ colName).distinct
-      Some(Actions(e.dirs, e.files, schema = Some(newSchema),
+      Some(Actions(e.files, schema = Some(newSchema),
         properties = Some(e.properties - ManagedTable.notNullKey(colName) +
           (ManagedTable.droppedColsKey -> dropped.mkString(",")))))
     }
@@ -2151,9 +2000,6 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
   def fsck(repair: Boolean = false): Seq[String] = {
     var missing = Seq.empty[String]
     transact("FSCK", FailIfMoved()) { e =>
-      require(e.files.nonEmpty || e.dirs.isEmpty,
-        "fsck requires a stats-bearing snapshot (run OPTIMIZE once on " +
-          "legacy tables)")
       val missingData = e.files.filter(f =>
         !Files.isRegularFile(dataDir.resolve(f.path)))
       val missingDv = e.files.flatMap(_.dv).distinct
@@ -2169,7 +2015,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       Option.when(repair && missingData.nonEmpty) {
         val missingSet = missingData.map(_.path).toSet
         val kept = e.files.filterNot(f => missingSet(f.path))
-        Actions(kept.map(_.leafDir).distinct, kept,
+        Actions(kept,
           Map("numRemovedFiles" -> missingData.size.toString))
       }
     }
@@ -2226,7 +2072,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
             s"cannot SET NOT NULL on `$colName`: existing row has NULL: ${bad.head}")
         val newSchema = StructType(e.schema.fields.map(x =>
           if (x.name == colName) x.copy(nullable = false) else x))
-        Actions(e.dirs, e.files, schema = Some(newSchema),
+        Actions(e.files, schema = Some(newSchema),
           properties = Some(e.properties +
             (ManagedTable.notNullKey(colName) -> s"`$colName` IS NOT NULL")))
       }
@@ -2241,7 +2087,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
           e.properties.contains(ManagedTable.notNullKey(colName))) {
         val newSchema = StructType(e.schema.fields.map(x =>
           if (x.name == colName) x.copy(nullable = true) else x))
-        Actions(e.dirs, e.files, schema = Some(newSchema),
+        Actions(e.files, schema = Some(newSchema),
           properties = Some(e.properties - ManagedTable.notNullKey(colName)))
       }
     }
@@ -2294,8 +2140,6 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     */
   def cloneTo(targetPath: String): ManagedTable = {
     val e = latestEntry
-    require(e.files.nonEmpty,
-      s"cloneTo requires a stats-bearing snapshot at $location")
     require(!ManagedTable.exists(targetPath),
       s"Table already exists: $targetPath")
     val dst = new ManagedTable(spark, targetPath)
@@ -2321,7 +2165,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     }
     val props = e.properties.filterNot(_._1.startsWith("graft.txn."))
     dst.commit(LogEntry(0L, System.currentTimeMillis(), "CLONE",
-      e.dirs, e.schema, e.partitionColumns, props, e.files,
+      e.schema, e.partitionColumns, props, e.files,
       metrics = Map("numClonedFiles" -> e.files.size.toString,
         "sourceTable" -> location, "sourceVersion" -> e.version.toString)))
     dst
@@ -2386,9 +2230,6 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     require(fromVersion >= 0 && fromVersion <= latest,
       s"fromVersion must be in [0, $latest], got $fromVersion")
     val entries = (fromVersion to latest).map(readEntry)
-    entries.foreach(e => require(e.files.nonEmpty || e.dirs.isEmpty,
-      s"exportDelta requires stats-bearing snapshots at $location " +
-        s"(version ${e.version} tracks directories, not files)"))
     val root = Paths.get(targetPath)
     require(!Files.exists(root) || {
       val s = Files.list(root); try !s.iterator().hasNext finally s.close()
@@ -2414,28 +2255,11 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
     }
     def encPath(f: FileStat): String =
       relOf(f).split('/').map(encSeg).mkString("/")
-    // one decoder for `k=v` segments, shared by json actions and the
-    // checkpoint writer (value null = __HIVE_DEFAULT_PARTITION__).
-    // FileStats.unescapePath is the exact inverse of Spark's
-    // escapePathName; URLDecoder is NOT (it would turn a literal '+' —
-    // unescaped by Spark — into a space)
-    def partValuesOf(f: FileStat): Seq[(String, String)] = {
-      val leaf = ManagedTable.leafSuffix(f.leafDir)
-      if (leaf.isEmpty) Nil
-      else leaf.split('/').filter(_.nonEmpty).toSeq.map { seg =>
-        val i = seg.indexOf('=')
-        require(i > 0, s"non-hive partition segment in $leaf")
-        val raw = seg.substring(i + 1)
-        seg.substring(0, i) ->
-          (if (raw == "__HIVE_DEFAULT_PARTITION__") null
-           else FileStats.unescapePath(raw))
-      }
-    }
     def fillPartValues(
         holder: com.fasterxml.jackson.databind.node.ObjectNode,
         f: FileStat): Unit = {
       val pv = holder.putObject("partitionValues")
-      partValuesOf(f).foreach { case (k, v) =>
+      hivePartitionValues(f).foreach { case (k, v) =>
         if (v == null) { pv.putNull(k); () } else { pv.put(k, v); () }
       }
     }
@@ -2735,7 +2559,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
               mapper.writeValueAsString(sn)
             case None => stats(f)
           }
-          Row(null, Row(encPath(f), partValuesOf(f).toMap, f.bytes,
+          Row(null, Row(encPath(f), hivePartitionValues(f).toMap, f.bytes,
             Files.getLastModifiedTime(dataDir.resolve(f.path)).toMillis,
             false, statsStr, dvRow), null, null)
         }
@@ -2894,13 +2718,13 @@ object ManagedTable {
   private[tables] val maxCommitRetries = 10
 
   /** What one commit changes, computed against the snapshot
-    * [[ManagedTable.transact]] hands it: the new snapshot's leaf dirs and
-    * files, and this commit's own metrics and CDC sidecars (never the
-    * previous commit's). Schema and properties keep the snapshot's values
-    * unless given; partitioning is fixed at version 0.
+    * [[ManagedTable.transact]] hands it: the new snapshot's files, and
+    * this commit's own metrics and CDC sidecars (never the previous
+    * commit's). Schema and properties keep the snapshot's values unless
+    * given; partitioning is fixed at version 0.
     */
   private[tables] final case class Actions(
-      dirs: Seq[String], files: Seq[FileStat],
+      files: Seq[FileStat],
       metrics: Map[String, String] = Map.empty,
       cdc: Seq[String] = Nil,
       schema: Option[StructType] = None,
@@ -3086,20 +2910,22 @@ object ManagedTable {
     if (i < 0) "" else dir.substring(i + 1)
   }
 
-  /** `files`: per-file row counts + min/max bounds for data skipping (see
-    * [[FileStats]]). When non-empty it is the AUTHORITATIVE snapshot — a
-    * file-granular MERGE keeps untouched files verbatim while their
-    * siblings are replaced, which `dirs` alone cannot express. `dirs`
-    * remains the leaf-directory view (vacuum reference-counting,
-    * partition-scoped ops, entries written before stats existed).
+  /** `files`: the snapshot — every live data file with its row count,
+    * min/max bounds for data skipping (see [[FileStats]]) and deletion
+    * vector. A file-granular MERGE keeps untouched files verbatim while
+    * their siblings are replaced. `dirs` is the leaf-directory view
+    * derived from it (vacuum reference-counting, partition specs), also
+    * written to the log.
     */
   private[tables] final case class LogEntry(
       version: Long, timestampMs: Long, operation: String,
-      dirs: Seq[String], schema: StructType,
+      schema: StructType,
       partitionColumns: Seq[String], properties: Map[String, String],
       files: Seq[FileStat] = Nil,
       metrics: Map[String, String] = Map.empty,
       cdc: Seq[String] = Nil) {
+
+    def dirs: Seq[String] = files.map(_.leafDir).distinct
 
     def toJson: String = {
       val root = mapper.createObjectNode()
@@ -3128,25 +2954,37 @@ object ManagedTable {
   }
 
   private[tables] object LogEntry {
+    /** Parses one log entry, refusing the two formats that predate the
+      * file list being the whole snapshot: an entry listing data `dirs`
+      * without per-file stats, and a deletion-vector file without its
+      * `dvRows` count.
+      */
     def fromJson(s: String): LogEntry = {
       val n = mapper.readTree(s)
+      val version = n.get("version").asLong()
       def arr(field: String): Seq[String] =
         n.get(field).elements().asScala.map(_.asText()).toSeq
       def strMap(node: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
         node.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
+      def unreadable(what: String) = new IllegalStateException(
+        s"Log entry v$version predates $what and can no longer be read; " +
+          "rewrite the table with a release that still reads this format")
       val files =
         if (!n.has("files")) Nil
         else n.get("files").elements().asScala.map { f =>
+          val dv = Option.when(f.has("dv"))(f.get("dv").asText())
+          if (dv.isDefined && !f.has("dvRows"))
+            throw unreadable("deletion-vector row counts (a file has `dv` but no `dvRows`)")
           FileStat(f.get("path").asText(), f.get("rows").asLong(),
             f.get("bytes").asLong(), strMap(f.get("min")), strMap(f.get("max")),
-            if (f.has("dv")) Some(f.get("dv").asText()) else None,
-            if (f.has("dvRows")) Some(f.get("dvRows").asLong()) else None)
+            dv, dv.map(_ => f.get("dvRows").asLong()))
         }.toSeq
+      if (files.isEmpty && arr("dirs").nonEmpty)
+        throw unreadable("per-file stats (it lists data `dirs` but no `files`)")
       LogEntry(
-        n.get("version").asLong(),
+        version,
         n.get("timestampMs").asLong(),
         n.get("operation").asText(),
-        arr("dirs"),
         DataType.fromJson(n.get("schema").asText()).asInstanceOf[StructType],
         arr("partitionColumns"),
         strMap(n.get("properties")),
@@ -3352,7 +3190,7 @@ object ManagedTable {
         else f)
     }
     t.commit(LogEntry(0L, System.currentTimeMillis(), operation,
-      dirs, schema, partitionBy, properties, stats,
+      schema, partitionBy, properties, stats,
       metrics = writeMetrics(stats) +
         ("numConvertedFiles" -> files.size.toString)))
     t
@@ -3415,7 +3253,7 @@ object ManagedTable {
       tableSchema = df.schema)
     val stats = t.statsFor(dirs, df.schema)
     t.commit(LogEntry(0L, System.currentTimeMillis(), "CREATE",
-      dirs, df.schema, partitionBy, properties, stats,
+      df.schema, partitionBy, properties, stats,
       metrics = ManagedTable.writeMetrics(stats)))
     t
   }

@@ -29,6 +29,18 @@ class CloneSpec extends SparkSpec {
     assert(c.history.filter(col("operation") === "CLONE").count() == 1)
   }
 
+  test("an empty partitioned table clones; the clone evolves on its own") {
+    val t = ManagedTable.create(
+      spark.range(0).select(col("id").as("k"), (col("id") % 2).as("p")),
+      tmpDir("cl0"), partitionBy = Seq("p"))
+    val c = t.cloneTo(tmpDir("cl0_clone"))
+    assert(c.toDF.isEmpty && c.partitionColumns == Seq("p"))
+    c.append(Seq((7L, 1L)).toDF("k", "p"))
+    assert(c.toDF.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((7L, 1L)))
+    assert(t.latestVersion == 0 && t.toDF.isEmpty && t.numRows == 0,
+      "appending to the clone changed the source")
+  }
+
   test("vacuuming the source does not break the clone (hard links)") {
     val t = ManagedTable.create(
       spark.range(300).select(col("id").as("k"), col("id").as("v")),

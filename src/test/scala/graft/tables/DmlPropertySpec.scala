@@ -4,6 +4,9 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
+import com.fasterxml.jackson.databind.ObjectMapper
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Property-style invariants for the DML + CDF machinery over seeded
   * random commit sequences (append / delete / update / optimize) against
@@ -13,7 +16,11 @@ import graft.SparkSpec
   *      the final snapshot (inserts added, deletes removed, in commit
   *      order) — at whatever file layout the sequence produced;
   *   3. versions advance only for effective commits (no-op DML burns
-  *      nothing).
+  *      nothing);
+  *   4. after every step, every log version's on-disk `dirs` are exactly
+  *      its files' leaf dirs (the log's file list is the whole snapshot)
+  *      and the metadata row count equals the model's size — including
+  *      after a final step that deletes every row.
   */
 class DmlPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -22,13 +29,27 @@ class DmlPropertySpec extends SparkSpec {
     StructField("k", LongType),
     StructField("v", LongType)))
 
+  /** Invariant 4 over the raw log JSON of every version of `t`. */
+  private def checkLog(t: ManagedTable, loc: String, modelRows: Int, what: String): Unit = {
+    val mapper = new ObjectMapper()
+    (0L to t.latestVersion).foreach { v =>
+      val n = mapper.readTree(Files.readString(Paths.get(loc, "_graft_log", s"v$v.json")))
+      val dirs = n.get("dirs").elements().asScala.map(_.asText()).toSet
+      val leaves = n.get("files").elements().asScala
+        .map { f => val p = f.get("path").asText(); p.substring(0, p.lastIndexOf('/')) }.toSet
+      assert(dirs == leaves, s"$what: v$v dirs $dirs != its files' leaf dirs $leaves")
+    }
+    assert(t.numRows == modelRows, s"$what: numRows ${t.numRows} != model $modelRows")
+  }
+
   test("DML + CDF invariants hold for 8 random commit sequences") {
     val rnd = new scala.util.Random(77)
     (1 to 8).foreach { i =>
       // alternate CDF sidecar capture on/off so the replay invariant
       // property-tests BOTH feed paths (sidecar read vs derivation)
+      val loc = tmpDir(s"dmlp$i")
       val t = ManagedTable.create(
-        df(schema, (0L until 60L).map(k => Row(k, k * 2))), tmpDir(s"dmlp$i"),
+        df(schema, (0L until 60L).map(k => Row(k, k * 2))), loc,
         properties =
           if (i % 2 == 0) Map(ManagedTable.cdfPropKey -> "true") else Map.empty)
       t.optimize(targetFileSizeBytes = 1024, sortBy = Seq("k"))
@@ -36,8 +57,9 @@ class DmlPropertySpec extends SparkSpec {
         (0L until 60L).map(k => (k, k * 2)).toVector
       val v0 = t.latestVersion
       var nextK = 1000L * i
+      checkLog(t, loc, model.size, s"case $i setup")
 
-      (1 to 6).foreach { _ =>
+      (1 to 6).foreach { step =>
         rnd.nextInt(4) match {
           case 0 => // append a small batch (possibly duplicate keys)
             val rows = (0 until 1 + rnd.nextInt(4)).map { _ =>
@@ -77,7 +99,19 @@ class DmlPropertySpec extends SparkSpec {
             assert(t.latestVersion == v,
               s"case $i: a second OPTIMIZE burned a version over $laidOut")
         }
+        checkLog(t, loc, model.size, s"case $i step $step")
       }
+
+      // delete every row: the empty table reads, counts and no-ops like
+      // any other
+      assert(t.delete("true") == model.size, s"case $i delete-all")
+      model = Vector.empty
+      checkLog(t, loc, 0, s"case $i delete-all")
+      val emptyAt = t.latestVersion
+      assert(t.delete("true") == 0 && t.update(Map("v" -> "v + 1")) == 0)
+      t.optimize(targetFileSizeBytes = 4 * 1024, sortBy = Seq("k"))
+      assert(t.latestVersion == emptyAt, s"case $i: an empty-table no-op burned a version")
+      checkLog(t, loc, 0, s"case $i empty")
 
       // 1. contents == model (multiset)
       val got = t.toDF.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 /** File-level data skipping: per-file min/max stats in the log, filtered
   * scans that skip files, file-granular MERGE rewrite pruning, and
@@ -172,23 +174,41 @@ class FileStatsSpec extends SparkSpec {
     assert(t.toDF.count() == 301)
   }
 
-  test("entries without stats (legacy log) read fine and backfill on next write") {
-    val loc = tmpDir("fs6")
+  test("log entries predating per-file stats or DV row counts are refused") {
+    val mapper = new ObjectMapper()
+    // commit `e` as the next version, its JSON edited by `edit`
+    def commitEdited(loc: String, e: ManagedTable.LogEntry)(
+        edit: ObjectNode => Unit): Long = {
+      val n = mapper.readTree(e.copy(version = e.version + 1).toJson)
+        .asInstanceOf[ObjectNode]
+      edit(n)
+      Files.writeString(Paths.get(loc, "_graft_log", s"v${e.version + 1}.json"),
+        mapper.writeValueAsString(n))
+      e.version + 1
+    }
+    def refusal(loc: String): String = intercept[IllegalStateException](
+      ManagedTable.forPath(spark, loc).toDF).getMessage
+    // (a) data dirs but no file list: the key missing, or an empty list
+    Seq[ObjectNode => Unit](
+      n => { n.remove("files"); () },
+      n => { n.putArray("files"); () }
+    ).zipWithIndex.foreach { case (edit, i) =>
+      val loc = tmpDir(s"fs6$i")
+      val v = commitEdited(loc, rangedTable(loc).latestEntry)(edit)
+      val msg = refusal(loc)
+      assert(msg.contains(s"v$v") && msg.contains("predates per-file stats"), msg)
+    }
+    // (b) a deletion-vector file without its dvRows count
+    val loc = tmpDir("fs6dv")
     val t = rangedTable(loc)
-    // simulate a pre-stats log: rewrite the latest entry without `files`
-    val e = t.latestEntry
-    val legacy = e.copy(version = e.version + 1, files = Nil)
-    Files.writeString(
-      Paths.get(loc, "_graft_log", s"v${legacy.version}.json"), legacy.toJson)
-    val t2 = ManagedTable.forPath(spark, loc)
-    assert(t2.fileStats.isEmpty)
-    assert(t2.toDF.count() == 300) // dir-based read path
-    assert(t2.toDFWhere("pk >= 250").count() == 51) // no stats: no skipping, right rows
-    // next write backfills stats for the whole table from footers
-    t2.append(df(schema, Seq(Row(301, "n301", 3010L))).coalesce(1))
-    assert(t2.fileStats.size == 4)
-    assert(t2.fileStats.map(_.rows).sum == 301)
-    assert(t2.toDFWhere("pk >= 250").inputFiles.length == 2)
+    t.setProperties(Map(ManagedTable.dvPropKey -> "true"))
+    assert(t.delete("pk <= 10") == 10)
+    val v = commitEdited(loc, t.latestEntry) { n =>
+      n.get("files").elements().forEachRemaining(f =>
+        f.asInstanceOf[ObjectNode].remove("dvRows"))
+    }
+    val msg = refusal(loc)
+    assert(msg.contains(s"v$v") && msg.contains("predates deletion-vector row counts"), msg)
   }
 
   test("timestamp bounds prune filtered scans with TIMESTAMP literals") {

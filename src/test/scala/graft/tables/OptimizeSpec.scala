@@ -94,4 +94,18 @@ class OptimizeSpec extends SparkSpec {
     assert(t.numRows == 2990)
     assertLaidOut(t, target)
   }
+
+  test("OPTIMIZE of an empty table commits nothing, in every form") {
+    Seq(Seq("p"), Nil).foreach { parts =>
+      val t = ManagedTable.create(
+        spark.range(0).select(col("id").as("k"), (col("id") % 2).as("p")),
+        tmpDir("optempty"), partitionBy = parts)
+      val v = t.latestVersion
+      t.optimize()
+      t.optimize(sortBy = Seq("k"))
+      t.optimize(zorderBy = Seq("k"))
+      assert(t.latestVersion == v, s"partitionBy $parts: OPTIMIZE burned a version")
+      assert(t.numRows == 0 && t.toDF.isEmpty)
+    }
+  }
 }
