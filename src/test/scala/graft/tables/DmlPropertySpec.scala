@@ -42,6 +42,25 @@ class DmlPropertySpec extends SparkSpec {
     assert(t.numRows == modelRows, s"$what: numRows ${t.numRows} != model $modelRows")
   }
 
+  /** Invariant 2: the snapshot at `from` with every later version's change
+    * feed applied in commit order, as sorted (k, v) pairs. */
+  private def replay(t: ManagedTable, from: Long): Seq[(Long, Long)] = {
+    val to = t.latestVersion
+    val ch = t.changes(from, to).persist()
+    var state = t.toDF(from)
+    ((from + 1) to to).foreach { v =>
+      val c = ch.filter(col("_commit_version") === v)
+      state = state
+        .exceptAll(c.filter(col("_change_type")
+          .isin("delete", "update_preimage")).select("k", "v"))
+        .unionAll(c.filter(col("_change_type")
+          .isin("insert", "update_postimage")).select("k", "v"))
+    }
+    val replayed = state.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    ch.unpersist()
+    replayed
+  }
+
   test("DML + CDF invariants hold for 8 random commit sequences") {
     val rnd = new scala.util.Random(77)
     (1 to 8).foreach { i =>
@@ -102,8 +121,15 @@ class DmlPropertySpec extends SparkSpec {
         checkLog(t, loc, model.size, s"case $i step $step")
       }
 
-      // delete every row: the empty table reads, counts and no-ops like
-      // any other
+      // 1. contents == model (multiset)
+      val got = t.toDF.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      assert(got == model.sorted.toSeq, s"case $i contents diverged from model")
+
+      // 2. CDF replay: from-snapshot + feed == final snapshot
+      assert(replay(t, v0) == got, s"case $i CDF replay diverged")
+
+      // delete every row: the empty table reads, counts, replays and
+      // no-ops like any other
       assert(t.delete("true") == model.size, s"case $i delete-all")
       model = Vector.empty
       checkLog(t, loc, 0, s"case $i delete-all")
@@ -112,26 +138,8 @@ class DmlPropertySpec extends SparkSpec {
       t.optimize(targetFileSizeBytes = 4 * 1024, sortBy = Seq("k"))
       assert(t.latestVersion == emptyAt, s"case $i: an empty-table no-op burned a version")
       checkLog(t, loc, 0, s"case $i empty")
-
-      // 1. contents == model (multiset)
-      val got = t.toDF.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(got == model.sorted.toSeq, s"case $i contents diverged from model")
-
-      // 2. CDF replay: from-snapshot + feed == final snapshot
-      val to = t.latestVersion
-      val ch = t.changes(v0, to).persist()
-      var state = t.toDF(v0)
-      ((v0 + 1) to to).foreach { v =>
-        val c = ch.filter(col("_commit_version") === v)
-        state = state
-          .exceptAll(c.filter(col("_change_type")
-            .isin("delete", "update_preimage")).select("k", "v"))
-          .unionAll(c.filter(col("_change_type")
-            .isin("insert", "update_postimage")).select("k", "v"))
-      }
-      val replayed = state.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(replayed == got, s"case $i CDF replay diverged")
-      ch.unpersist()
+      assert(t.toDF.isEmpty, s"case $i: rows left after delete-all")
+      assert(replay(t, v0).isEmpty, s"case $i CDF replay to the empty table diverged")
       ()
     }
   }
